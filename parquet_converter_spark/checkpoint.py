@@ -40,11 +40,14 @@ def completed_groups(io, run_id: str | None = None) -> DataFrame:
     matches the logical id by prefix — every attempt of this run."""
     m = read_manifest(io).where(F.col("status") == "done")
     if run_id is not None:
-        m = m.where(
-            (F.col("run_id") == run_id)
-            | F.col("run_id").startswith(run_id + "~")
-        )
+        m = m.where(_of_run(run_id))
     return m.select("bucket", "salt").distinct()
+
+
+def _of_run(run_id: str):
+    """Rows of every attempt of LOGICAL run ``run_id``: the bare id or
+    any ``{run_id}~<attempt>`` physical id."""
+    return (F.col("run_id") == run_id) | F.col("run_id").startswith(run_id + "~")
 
 
 def pending_groups(io, planned: DataFrame, run_id: str | None = None) -> DataFrame:
@@ -105,44 +108,70 @@ def committed_blocks(io) -> DataFrame:
     return blocks.join(visible_triples(io), ["bucket", "salt", "run_id"], "left_semi")
 
 
-def prior_geometry(
-    io, run_id: str, salt_rows: int, chunk_rows: int, tb_secs: int | None
-) -> int | None:
-    """num_buckets recorded by a prior attempt of this LOGICAL run with
-    identical grouping parameters, or None.
+def resume_probe(
+    io,
+    run_id: str,
+    scope_run: str | None,
+    salt_rows: int,
+    chunk_rows: int,
+    tb_secs: int | None,
+    geometry: bool,
+    committed: bool,
+) -> tuple[int | None, bool]:
+    """The one pre-encode metadata probe: ``(num_buckets, committed)``.
 
-    A resumed run must key groups exactly as the committed manifest
-    does, so when a prior attempt's table_meta row matches
-    (salt_rows, chunk_rows, time_bucket_secs), its num_buckets is both
-    the CORRECT choice (re-planning from a changed row estimate would
-    silently misalign the resume anti-join) and the cheap one: reusing
-    it skips every planning scan — the row estimate and, for
-    time-bucketed runs, the min/max(ts) span scan. Returns None when no
-    attempt matches or attempts disagree (caller re-plans)."""
+    ``num_buckets`` (asked with ``geometry``) is the bucket count a
+    prior attempt of this LOGICAL run recorded under identical grouping
+    parameters (salt_rows, chunk_rows, time_bucket_secs), or None when
+    no attempt matches or attempts disagree (caller re-plans). A resumed
+    run must key groups exactly as the committed manifest does, so the
+    recorded count is both the CORRECT choice (re-planning from a
+    changed row estimate would silently misalign the resume anti-join)
+    and the cheap one: reusing it skips every planning scan — the row
+    estimate and, for time-bucketed runs, the min/max(ts) span scan.
+
+    ``committed`` (asked with ``committed``) says whether at least one
+    'done' manifest row lies in resume scope (``scope_run``, see
+    ``completed_groups``); False lets the caller skip the resume
+    anti-join entirely.
+
+    Both are LIMITED metadata scans (≤2 distinct table_meta geometries,
+    ≤1 manifest row), unioned into ONE collect: one Spark execution
+    answers both. Absent tables cost a filesystem check, no job."""
+    from functools import reduce
+
     from .schema import TABLE_META_SCHEMA
 
-    if not io.exists(TABLE_META):
-        return None
-    m = io.read(TABLE_META, TABLE_META_SCHEMA)
-    rows = (
-        m.where(
-            (F.col("run_id") == run_id) | F.col("run_id").startswith(run_id + "~")
+    parts = []
+    if geometry and io.exists(TABLE_META):
+        parts.append(
+            io.read(TABLE_META, TABLE_META_SCHEMA)
+            .where(_of_run(run_id))
+            .where(F.col("salt_rows") == int(salt_rows))
+            .where(F.col("chunk_rows") == int(chunk_rows))
+            .where(F.col("time_bucket_secs").eqNullSafe(F.lit(tb_secs).cast("long")))
+            .select(F.lit("geometry").alias("kind"), "num_buckets")
+            .distinct()
+            .limit(2)
         )
-        .where(F.col("salt_rows") == int(salt_rows))
-        .where(F.col("chunk_rows") == int(chunk_rows))
-        .where(
-            F.col("time_bucket_secs").eqNullSafe(
-                F.lit(tb_secs).cast("long")
-            )
+    if committed and io.exists(MANIFEST):
+        m = read_manifest(io).where(F.col("status") == "done")
+        if scope_run is not None:
+            m = m.where(_of_run(scope_run))
+        parts.append(
+            m.select(
+                F.lit("committed").alias("kind"),
+                F.lit(None).cast("int").alias("num_buckets"),
+            ).limit(1)
         )
-        .select("num_buckets")
-        .distinct()
-        .limit(2)
-        .collect()
+    if not parts:
+        return None, False
+    rows = reduce(DataFrame.unionByName, parts).collect()
+    nbs = [r["num_buckets"] for r in rows if r["kind"] == "geometry"]
+    return (
+        int(nbs[0]) if len(nbs) == 1 else None,
+        any(r["kind"] == "committed" for r in rows),
     )
-    if len(rows) == 1:
-        return int(rows[0]["num_buckets"])
-    return None
 
 
 def retire_rows(triples: DataFrame) -> DataFrame:

@@ -1,13 +1,43 @@
 """The encode pipeline (SURVEY.md §3.4):
 
     source → resume anti-join → groupBy(bucket, salt)
-           → applyInPandas(sort, chunk, encode per column)
+           → applyInArrow(sort, chunk, encode per column)
            → blocks table + manifest + metrics commit
 
 All per-value work happens inside the grouped-map UDF on Arrow
 batches (vectorized numpy codecs); Spark's shuffle does the
 distribution. The manifest append is the commit point — see
 checkpoint.py for the resume/visibility contract.
+
+``encode_table`` issues only the Spark jobs the commit protocol needs,
+as four sequential steps (``‖`` = concurrent appends):
+
+    1. probe        one collect: recorded geometry + "anything committed
+                    in scope?" (checkpoint.resume_probe)
+    2. row estimate only when no geometry was recorded
+    3. blocks ‖ table_meta
+    4. manifest ‖ metrics   — starts after BOTH step-3 appends returned
+
+The crash state each edge can leave:
+
+* crash in 1–2: nothing written.
+* crash in 3: orphan blocks and/or an orphan table_meta row under an
+  attempt id with no manifest row. Invisible (readers semi-join the
+  manifest's visible triples); the extra meta row only widens a point
+  lookup's candidate buckets. A replay re-encodes under a NEW attempt
+  id, so the orphans never turn into duplicates.
+* table_meta lands before the manifest (step 3 → 4), so a VISIBLE run
+  always has its geometry — decode_conversation's bucket pruning
+  depends on it.
+* crash in 4: the manifest append either landed (run visible) or not
+  (run invisible, as in step 3). Metrics rows for an invisible attempt
+  are harmless: every metrics reader semi-joins visible triples
+  (cli report).
+
+The manifest and metrics are derived, distributed, from the blocks
+that actually landed (never from the UDF output directly); the summary
+and the maintenance abort read ``Observation`` counters taken on the
+blocks and manifest writes instead of re-reading either table.
 """
 
 from __future__ import annotations
@@ -17,7 +47,8 @@ import time
 import uuid
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import checkpoint as ckpt
 from .codecs.arrow_blocks import encode_block_arrow
@@ -198,6 +229,29 @@ def _encode_group_fn(run_id: str, codec: str, chunk_rows: int):
     return encode_group
 
 
+def _alongside(side, main):
+    """Run ``side()`` on a ``pyspark.InheritableThread`` (the job group
+    and local properties carry over) while ``main()`` runs here; join,
+    then re-raise ``side``'s exception. Both have returned when this
+    returns, so the next commit step may depend on either."""
+    failed: list[BaseException] = []
+
+    def run():
+        try:
+            side()
+        except BaseException as exc:  # noqa: BLE001 — re-raised after join
+            failed.append(exc)
+
+    t = InheritableThread(target=run)
+    t.start()
+    try:
+        main()
+    finally:
+        t.join()
+    if failed:
+        raise failed[0]
+
+
 def encode_table(
     spark: SparkSession,
     df: DataFrame,
@@ -231,7 +285,8 @@ def encode_table(
     commit point: readers see either the old blocks (commit absent) or
     the new blocks only (commit present), never both.
 
-    Returns a summary dict (groups encoded, rows, encoded bytes).
+    Returns a summary dict: groups committed, error groups, rows,
+    encoded bytes, num_buckets and ``chunks`` (committed block rows).
     ``max_groups`` bounds how many pending groups this invocation
     commits — used by the kill/resume test and usable as incremental
     batch commit on a real cluster. ``resume_scope='run'`` restricts
@@ -257,15 +312,24 @@ def encode_table(
     run_id = run_id or f"run_{int(time.time() * 1000):x}"
     phys_run_id = f"{run_id}~{uuid.uuid4().hex[:8]}"
     tb_secs = resolve_time_bucket(time_bucket)
+    scope_run = run_id if resume_scope == "run" else None
+
+    # ---- step 1: probe. ONE collect answers both pre-encode questions:
+    # did a prior attempt of this logical run record its geometry under
+    # identical grouping params (resume MUST key groups identically, and
+    # reusing it skips every planning scan), and is anything committed
+    # in resume scope (if not, and with no group cap, the resume
+    # anti-join is skipped: no full-table distinct over the input)
+    recorded, already = ckpt.resume_probe(
+        io, run_id, scope_run, salt_rows, chunk_rows, tb_secs,
+        geometry=num_buckets is None and resume,
+        committed=resume and max_groups is None,
+    )
+    num_buckets = num_buckets if num_buckets is not None else recorded
     span = None
-    if num_buckets is None and resume:
-        # geometry reuse: a prior attempt of this logical run already
-        # recorded its num_buckets under identical grouping params —
-        # resume MUST key groups identically anyway, and reusing skips
-        # every planning scan (row estimate + ts span)
-        num_buckets = ckpt.prior_geometry(io, run_id, salt_rows, chunk_rows, tb_secs)
     if num_buckets is None:
-        # planning estimate only — never a full scan of a non-parquet
+        # ---- step 2 (only without recorded geometry): row estimate.
+        # Planning estimate only — never a full scan of a non-parquet
         # source (estimate_input_rows: parquet metadata count, else
         # bytes/avg-line-length)
         n_rows = estimate_input_rows(spark, df)
@@ -308,17 +372,6 @@ def encode_table(
 
     keyed = with_group_keys(df, num_buckets, salt_rows, time_bucket=tb_secs)
 
-    # fresh-run fast path: nothing committed (in scope) and no group cap
-    # → skip the full-table distinct + semi-join entirely (saves one
-    # complete aggregate job over the input on every first run). The
-    # manifest-exists probe is a filesystem check, so a fresh TABLE
-    # skips even the empty-manifest scan job.
-    scope_run = run_id if resume_scope == "run" else None
-    already = (
-        resume
-        and io.exists(ckpt.MANIFEST)
-        and ckpt.completed_groups(io, scope_run).limit(1).count() > 0
-    )
     if not already and max_groups is None:
         todo = keyed
     else:
@@ -345,14 +398,55 @@ def encode_table(
         blocks = grouped.applyInPandas(
             _encode_group_fn(phys_run_id, codec, chunk_rows), schema=BLOCKS_STORED_SCHEMA
         )
-    io.append(blocks, ckpt.BLOCKS, compression="uncompressed")
+    # the commit counters are observed on the way to the sinks, never
+    # re-read: the observed aggregates sit in the write's result stage,
+    # whose accumulator updates Spark applies once per partition
+    landed = Observation()
+    blocks = blocks.observe(landed, F.count(F.when(F.col("chunk") == -1, 1)).alias("errors"))
 
-    # ---- commit: derive manifest + metrics from what actually landed.
-    # blk_bytes was computed inside the UDF, so these commit jobs only
-    # scan the small non-binary columns (parquet column pruning).
-    # attempt-scoped: only THIS invocation's rows, never a prior
-    # same-run_id attempt's (replay-safety — see docstring)
-    written = io.read(ckpt.BLOCKS).where(F.col("run_id") == phys_run_id)
+    # table metadata: partitioning parameters decoders need for
+    # selective reads (bucket pruning / conv_id point lookup) and
+    # resumes reuse as planned geometry (resume_probe). One row per
+    # attempt — epochs/resumes may plan different bucket counts, and a
+    # pruning reader must consider every bucketing that ever wrote.
+    # Driver-local one-row frame: the Arrow local-relation path, not a
+    # 32-slice Python RDD whose write costs ~0.7 s (localframe.py)
+    from .localframe import local_df
+    from .schema import TABLE_META_SCHEMA
+
+    ts_lo, ts_hi = span if span is not None else (None, None)
+    meta_df = local_df(
+        spark,
+        [
+            (
+                phys_run_id,
+                int(num_buckets),
+                int(salt_rows),
+                int(chunk_rows),
+                1,
+                tb_secs,
+                ts_lo,
+                ts_hi,
+            )
+        ],
+        TABLE_META_SCHEMA,
+    )
+    # ---- step 3: blocks ‖ table_meta. Independent appends, so they
+    # overlap; both must have RETURNED before step 4 starts
+    _alongside(
+        lambda: io.append(meta_df, ckpt.TABLE_META, compression="snappy"),
+        lambda: io.append(blocks, ckpt.BLOCKS, compression="uncompressed"),
+    )
+
+    # ---- step 4: manifest ‖ metrics, both derived distributed from
+    # what actually landed. blk_bytes was computed inside the UDF, so
+    # these scan only the small non-binary columns (parquet column
+    # pruning). Attempt-scoped: only THIS invocation's rows, never a
+    # prior same-run_id attempt's (replay-safety — see docstring). The
+    # pinned schema skips parquet schema inference, itself a Spark job
+    written = io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA).where(
+        F.col("run_id") == phys_run_id
+    )
     manifest = (
         written.select("bucket", "salt", "chunk", "n_rows", "blk_bytes")
         .groupBy("bucket", "salt")
@@ -381,14 +475,11 @@ def encode_table(
         # re-encode errored, commit NOTHING — appending the retire rows
         # would permanently hide the error groups' source data (data
         # loss), and appending only the done rows would double the
-        # successful groups. Aborting leaves the new blocks as
-        # manifest-less orphans (invisible; vacuum reclaims them) and
-        # the old table untouched — the same guarantee as any crash
-        # before the commit point.
-        n_err = (
-            written.where(F.col("chunk") == -1).limit(1).count()
-        )
-        if n_err:
+        # successful groups. Aborting leaves the new blocks (and this
+        # attempt's table_meta row) as manifest-less orphans (invisible;
+        # vacuum reclaims the blocks) and the old table untouched — the
+        # same guarantee as any crash before the commit point.
+        if landed.get["errors"]:
             raise RuntimeError(
                 "maintenance re-encode hit per-group errors; commit aborted — "
                 "old triples remain visible, new blocks are orphaned "
@@ -399,42 +490,16 @@ def encode_table(
         # manifest frame here is one row per group (tiny), so a single
         # part file keeps the multi-file-commit window out of the swap
         manifest = manifest.coalesce(1)
-
-    # table metadata: partitioning parameters decoders need for
-    # selective reads (bucket pruning / conv_id point lookup) and
-    # resumes reuse as planned geometry (prior_geometry). One row per
-    # attempt — epochs/resumes may plan different bucket counts, and a
-    # pruning reader must consider every bucketing that ever wrote.
-    # Appended BEFORE the manifest commit: a crash between the two
-    # appends must leave at worst an orphan meta row for an invisible
-    # run (harmless — it only widens the candidate bucket set), never
-    # a VISIBLE run without its geometry, which would make
-    # decode_conversation's bucket pruning miss its rows forever.
-    from .localframe import local_df
-    from .schema import TABLE_META_SCHEMA
-
-    ts_lo, ts_hi = span if span is not None else (None, None)
-    # driver-local one-row frame: the Arrow local-relation path, not a
-    # 32-slice Python RDD whose write costs ~0.7 s (localframe.py)
-    meta_df = local_df(
-        spark,
-        [
-            (
-                phys_run_id,
-                int(num_buckets),
-                int(salt_rows),
-                int(chunk_rows),
-                1,
-                tb_secs,
-                ts_lo,
-                ts_hi,
-            )
-        ],
-        TABLE_META_SCHEMA,
+    done = F.col("status") == "done"
+    committed = Observation()
+    manifest = manifest.observe(
+        committed,
+        F.count(F.when(done, 1)).alias("groups"),
+        F.count(F.when(F.col("status") == "error", 1)).alias("errors"),
+        F.sum(F.when(done, F.col("n_rows"))).alias("rows"),
+        F.sum(F.when(done, F.col("encoded_bytes"))).alias("encoded_bytes"),
+        F.sum(F.when(done, F.col("n_chunks"))).alias("chunks"),
     )
-    io.append(meta_df, ckpt.TABLE_META, compression="snappy")
-
-    io.append(manifest, ckpt.MANIFEST, compression="snappy")
 
     # per-(group, column) codec metrics from the meta JSON
     meta_schema = "map<string, struct<codec:string, bytes:bigint>>"
@@ -456,21 +521,13 @@ def encode_table(
             "encoded_bytes",
         )
     )
-    io.append(metrics, ckpt.METRICS, compression="snappy")
-
-    summary = (
-        io.read(ckpt.MANIFEST)
-        .where(F.col("run_id") == phys_run_id)
-        .agg(
-            F.count(F.when(F.col("status") == "done", 1)).alias("groups"),
-            F.count(F.when(F.col("status") == "error", 1)).alias("errors"),
-            F.sum(F.when(F.col("status") == "done", F.col("n_rows"))).alias("rows"),
-            F.sum(
-                F.when(F.col("status") == "done", F.col("encoded_bytes"))
-            ).alias("encoded_bytes"),
-        )
-        .collect()[0]
+    # the manifest append is the commit point
+    _alongside(
+        lambda: io.append(metrics, ckpt.METRICS, compression="snappy"),
+        lambda: io.append(manifest, ckpt.MANIFEST, compression="snappy"),
     )
+
+    summary = committed.get
     return {
         "run_id": run_id,
         "physical_run_id": phys_run_id,
@@ -479,4 +536,5 @@ def encode_table(
         "rows": summary["rows"] or 0,
         "encoded_bytes": summary["encoded_bytes"] or 0,
         "num_buckets": num_buckets,
+        "chunks": summary["chunks"] or 0,
     }

@@ -7,8 +7,8 @@ action then round-trips the JVM↔Python boundary once per slice — a
 (measured: 2.6 s for ``count()``, ~6 s for ``coalesce(1).write``).
 These helpers keep metadata-sized frames on the fast paths:
 
-* :func:`local_df` — build via pandas + Arrow (a JVM LocalRelation:
-  ~0.2 s evaluation, no Python workers);
+* :func:`local_df` — build via Arrow (a JVM LocalRelation: ~0.2 s
+  evaluation, no Python workers);
 * :func:`empty_df` — an empty frame as a projected ``range(0)``
   (pure JVM, no RDD at all);
 * :func:`write_local_parquet` — write driver-local rows as ONE parquet
@@ -36,14 +36,19 @@ def empty_df(spark: SparkSession, schema: StructType) -> DataFrame:
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver-local rows → DataFrame via the pandas/Arrow fast path.
+    """Driver-local rows → DataFrame via an Arrow local relation.
 
     ``rows`` is a list of tuples (as for ``createDataFrame``); ``schema``
-    a StructType or DDL string. Falls back to the plain constructor if
-    the Arrow conversion rejects the data (never silently wrong)."""
-    from datetime import datetime
-
-    import pandas as pd
+    a StructType or DDL string. The result equals
+    ``createDataFrame(rows, schema)`` value for value: each column is
+    built with ``pa.array(values, type, from_pandas=False)``, so NaN
+    stays NaN (pandas semantics would turn it into null) and int64
+    values stay exact when mixed with None (a pandas column would carry
+    them through float64). Falls back to the plain constructor if Arrow
+    rejects the data (never silently wrong)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import TimestampType
 
     if isinstance(schema, str):
         from pyspark.sql.types import _parse_datatype_string
@@ -60,19 +65,25 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
             f"schema arity {len(names)}"
         )
 
-    def _norm(v):
-        # plain createDataFrame(list) interprets NAIVE datetimes in the
-        # SYSTEM-local zone; the pandas/Arrow path would re-interpret
-        # them in the session zone (UTC) — attach the system zone so
-        # the stored instant matches the replaced constructor exactly
-        if isinstance(v, datetime) and v.tzinfo is None:
-            return v.astimezone()
-        return v
+    def _column(values, field, arrow_type):
+        if isinstance(field.dataType, TimestampType):
+            # plain createDataFrame(list) interprets NAIVE datetimes in
+            # the SYSTEM-local zone, while pyarrow reads any datetime's
+            # wall clock as UTC and drops its offset — convert with the
+            # replaced constructor's own rule to epoch microseconds
+            values = [field.dataType.toInternal(v) for v in values]
+        return pa.array(values, arrow_type, from_pandas=False)
 
-    rows = [tuple(_norm(v) for v in r) for r in rows]
+    arrow_schema = to_arrow_schema(schema)
     try:
-        pdf = pd.DataFrame(dict(zip(names, (list(c) for c in zip(*rows)))))
-        return spark.createDataFrame(pdf, schema)
+        table = pa.Table.from_arrays(
+            [
+                _column(list(col), f, af.type)
+                for col, f, af in zip(zip(*rows), schema.fields, arrow_schema)
+            ],
+            schema=arrow_schema,
+        )
+        return spark.createDataFrame(table, schema)
     except Exception:  # pragma: no cover — conversion edge cases
         return spark.createDataFrame(rows, schema)
 

@@ -47,7 +47,13 @@ def numeric_profile(df: DataFrame, col: str) -> DataFrame:
     bucket, a second pinpoint pass collects just that bucket (~n/8192
     rows), and the interpolation replicates ``Percentile``'s exact
     arithmetic. Skewed buckets (pathological constant-heavy columns)
-    fall back to the builtin — never a wrong answer."""
+    fall back to the builtin — never a wrong answer.
+
+    Evaluation differs by type: a double column runs 2–3 Spark jobs
+    EAGERLY, at call time (stats aggregate, histogram pass, pinpoint
+    collect), and returns a materialized one-row frame that does not
+    see later changes to ``df``; every other type returns a lazy
+    single-aggregate plan."""
     c = F.col(col)
     dt = df.schema[col].dataType.simpleString() if col in df.columns else None
     if dt != "double":

@@ -797,18 +797,17 @@ def ivf_build_index(
     # dir write them with pyarrow directly (no Spark job — the
     # createDataFrame(list) path evaluates through a 32-slice Python
     # RDD and costs ~5 s per write, localframe.py); a REMOTE index_dir
-    # (hdfs://, s3://…) keeps the Spark writer, routed through the
-    # Arrow local-relation constructor so even that path pays no
-    # Python-RDD evaluation. spark.read.parquet reads both layouts.
-    from urllib.parse import urlparse
-
+    # (hdfs://, s3://…, or scheme-less under a remote fs.defaultFS)
+    # keeps the Spark writer, routed through the Arrow local-relation
+    # constructor so even that path pays no Python-RDD evaluation —
+    # the metadata then lands on the same filesystem as the vectors.
+    # spark.read.parquet reads both layouts.
     from ..localframe import local_df, write_local_parquet
 
-    u = urlparse(index_dir)
-    if u.scheme in ("", "file"):
+    base = _driver_fs_path(spark, index_dir)
+    if base is not None:
         import pyarrow as pa
 
-        base = u.path if u.scheme == "file" else index_dir
         write_local_parquet(
             f"{base}/centroids",
             pa.table(
@@ -851,17 +850,36 @@ def ivf_build_index(
     }
 
 
-def _local_index_path(index_dir: str, name: str) -> str | None:
-    """Filesystem path for a driver-readable index metadata dir, or
-    None when the index lives on a remote filesystem (hdfs://, s3://…)
-    and must go through a Spark read."""
-    import os
+def _driver_fs_path(spark, index_dir: str) -> str | None:
+    """Driver filesystem path of ``index_dir`` when Spark resolves it
+    to the local filesystem: an explicit ``file://`` URI, or a
+    scheme-less path while the Hadoop default filesystem is local.
+    None otherwise — Spark resolves a scheme-less path against
+    ``fs.defaultFS`` (hdfs://, s3a://…), so driver-side pyarrow I/O on
+    it would split the index across two filesystems."""
     from urllib.parse import urlparse
 
     u = urlparse(index_dir)
-    if u.scheme not in ("", "file"):
+    if u.scheme == "file":
+        return u.path
+    if u.scheme:
         return None
-    p = os.path.join(u.path or index_dir, name)
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(  # noqa: SLF001
+        "fs.defaultFS", "file:///"
+    )
+    return index_dir if urlparse(default_fs).scheme in ("", "file") else None
+
+
+def _local_index_path(spark, index_dir: str, name: str) -> str | None:
+    """Filesystem path for a driver-readable index metadata dir, or
+    None when the index lives on a remote filesystem and must go
+    through a Spark read."""
+    import os
+
+    base = _driver_fs_path(spark, index_dir)
+    if base is None:
+        return None
+    p = os.path.join(base, name)
     return p if os.path.isdir(p) else None
 
 
@@ -869,7 +887,7 @@ def _read_index_meta(spark, index_dir: str) -> dict:
     """index_meta row as a dict — pyarrow driver-side for local dirs
     (the 1-row read is driver metadata; a Spark job for it costs ~0.15 s
     per query), Spark read otherwise."""
-    p = _local_index_path(index_dir, "index_meta")
+    p = _local_index_path(spark, index_dir, "index_meta")
     if p is not None:
         import pyarrow.parquet as pq
 
@@ -879,7 +897,7 @@ def _read_index_meta(spark, index_dir: str) -> dict:
 
 
 def ivf_read_centroids(spark, index_dir: str) -> np.ndarray:
-    p = _local_index_path(index_dir, "centroids")
+    p = _local_index_path(spark, index_dir, "centroids")
     if p is not None:
         import pyarrow.parquet as pq
 

@@ -465,18 +465,52 @@ def test_table_meta_commits_before_manifest(spark, transcripts, tmp_path_factory
     """Geometry must land BEFORE the manifest commit: a crash between
     the two appends must never yield a VISIBLE run whose bucketing is
     unrecorded (decode_conversation's pruning would miss its rows
-    forever). An orphan meta row for an uncommitted run is harmless."""
-    order = []
+    forever). An orphan meta row for an uncommitted run is harmless.
+    The table_meta append overlaps the blocks append, so each append
+    is recorded when it RETURNS (landed), and the manifest append must
+    START only after both landed."""
+    events = []
 
     class RecordingIO(ParquetDirTableIO):
         def append(self, df, name, compression="uncompressed"):
-            order.append(name)
+            events.append(("start", name))
             super().append(df, name, compression)
+            events.append(("landed", name))
 
     out = str(tmp_path_factory.mktemp("metaord"))
     io = RecordingIO(spark, out)
     encode_table(spark, transcripts, io, run_id="m", salt_rows=512, num_buckets=4)
-    assert order.index(ckpt.TABLE_META) < order.index(ckpt.MANIFEST), order
+    manifest_start = events.index(("start", ckpt.MANIFEST))
+    assert events.index(("landed", ckpt.TABLE_META)) < manifest_start, events
+    assert events.index(("landed", ckpt.BLOCKS)) < manifest_start, events
+
+
+def test_failed_table_meta_append_commits_nothing(spark, transcripts, tmp_path_factory):
+    """The table_meta append runs on a side thread next to the blocks
+    append; its failure must surface from encode_table before the
+    commit point: no manifest row for that attempt, and a resume rerun
+    commits every row exactly once."""
+
+    class FailingMetaIO(ParquetDirTableIO):
+        fail = True
+
+        def append(self, df, name, compression="uncompressed"):
+            if name == ckpt.TABLE_META and self.fail:
+                raise OSError("simulated table_meta write failure")
+            super().append(df, name, compression)
+
+    out = str(tmp_path_factory.mktemp("metafail"))
+    io = FailingMetaIO(spark, out)
+    with pytest.raises(OSError, match="simulated table_meta"):
+        encode_table(spark, transcripts, io, run_id="mf", salt_rows=512, num_buckets=4)
+    # the blocks append completed (its orphans exist) but nothing committed
+    assert io.exists(ckpt.BLOCKS)
+    assert ckpt.read_manifest(io).count() == 0
+
+    io.fail = False
+    s = encode_table(spark, transcripts, io, run_id="mf", salt_rows=512, num_buckets=4)
+    assert s["rows"] == transcripts.count()
+    assert verify_decode_digest(decode_table(spark, io), transcripts)["ok"]
 
 
 def test_point_lookup_falls_back_when_visible_run_lacks_meta(
