@@ -320,11 +320,12 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         io = _io(spark, args.out)
+        snap = ckpt.ReadSnapshot(io)
         manifest = ckpt.read_manifest(io)
         # report VISIBLE state (what decode sees), plus maintenance debt
         summary = (
             manifest.where(F.col("status") == "done")
-            .join(ckpt.visible_triples(io), ["bucket", "salt", "run_id"], "left_semi")
+            .join(snap.visible, ckpt.TRIPLE, "left_semi")
             .agg(
                 F.count("*").alias("groups"),
                 F.sum("n_rows").alias("rows"),
@@ -335,7 +336,7 @@ def main(argv: list[str] | None = None) -> int:
         retired = manifest.where(F.col("status") == "retired").count()
         by_codec = (
             io.read(ckpt.METRICS)
-            .join(ckpt.visible_triples(io), ["bucket", "salt", "run_id"], "left_semi")
+            .join(snap.visible, ckpt.TRIPLE, "left_semi")
             .groupBy("column", "codec")
             .agg(F.sum("encoded_bytes").alias("bytes"), F.count("*").alias("groups"))
             .orderBy("column", "codec")

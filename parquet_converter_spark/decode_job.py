@@ -1,10 +1,20 @@
 """The decode pipeline: committed blocks → reconstructed transcript rows.
 
-``mapInPandas`` over block rows — each block row expands to up to
+``mapInArrow`` over block rows — each block row expands to up to
 chunk_rows transcript rows, all decoded with the vectorized numpy
 kernels (no per-row Python). Decode is embarrassingly parallel: no
 shuffle at all; global order is re-established only where a consumer
 asks for it (verification sorts by (conv_id, turn_idx)).
+
+Each public read (``decode_table``, ``decode_time_slice``,
+``decode_conversation``, ``corrupt_blocks``) opens ONE
+``checkpoint.ReadSnapshot``, which answers the format gate, the visible
+triple set and a point lookup's candidate buckets. On a local table
+whose manifest holds at most ``checkpoint.DRIVER_MANIFEST_ROWS`` rows
+and ``checkpoint.DRIVER_VISIBLE_ROWS`` visible triples that costs no
+Spark job, so a full decode runs two: the broadcast of the visible set
+and the consumer's own action. Other tables resolve visibility with one
+distributed aggregate inside the same plan (checkpoint docstring).
 """
 
 from __future__ import annotations
@@ -17,33 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from . import checkpoint as ckpt
 from .codecs.blocks import decode_block
 from .schema import ENCODED_COLUMNS, TRANSCRIPT_SCHEMA
-
-#: highest table format this decoder understands (block frames carry
-#: their own per-blob version; this is the table-level contract)
-SUPPORTED_FORMAT_VERSION = 1
-
-
-def _check_format_version(io) -> None:
-    """Fail fast with a clear message when the table was written by a
-    newer engine — garbled per-block errors are the alternative."""
-    if not io.exists(ckpt.TABLE_META):
-        return  # pre-table_meta tables are format 1 by definition
-    from pyspark.sql import functions as F
-
-    from .schema import TABLE_META_SCHEMA
-
-    # pinned schema: meta files written before the geometry columns
-    # existed read them as nulls instead of poisoning schema inference
-    vmax = (
-        io.read(ckpt.TABLE_META, TABLE_META_SCHEMA)
-        .agg(F.max("format_version").alias("v"))
-        .collect()[0]["v"]
-    )
-    if vmax is not None and vmax > SUPPORTED_FORMAT_VERSION:
-        raise ValueError(
-            f"table format_version {vmax} is newer than this decoder "
-            f"(supports <= {SUPPORTED_FORMAT_VERSION}); upgrade the engine"
-        )
 
 
 def decode_table(
@@ -84,21 +67,41 @@ def decode_table(
     corrupt block drops that block row's rows (ALL its columns — never
     misaligned partial columns) instead of failing the job; use
     ``corrupt_blocks`` to locate and diagnose the damage.
+    A table written by a newer engine format raises ``ValueError``
+    before any block is read.
     """
-    import pyspark.sql.types as T
-    from pyspark.sql import functions as F
+    return _decode(
+        ckpt.ReadSnapshot(io), buckets=buckets, columns=columns,
+        arrow_native=arrow_native, on_error=on_error, ts_range=ts_range,
+        conv_range=conv_range, skip_all_null_ts_blocks=skip_all_null_ts_blocks,
+    )
+
+
+def _decode(
+    snap,
+    buckets: list | None = None,
+    columns: list[str] | None = None,
+    arrow_native: bool = True,
+    on_error: str = "raise",
+    ts_range: tuple | None = None,
+    conv_range: tuple | None = None,
+    skip_all_null_ts_blocks: bool = False,
+) -> DataFrame:
+    """``decode_table`` over an open snapshot; ``buckets`` may hold
+    constant Column expressions (``ReadSnapshot.bucket_predicates``)."""
+    from pyspark.sql import Column, functions as F
 
     if on_error not in ("raise", "skip"):
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-    _check_format_version(io)
     cols = list(columns) if columns is not None else list(ENCODED_COLUMNS)
     unknown = set(cols) - set(ENCODED_COLUMNS)
     if unknown:
         raise ValueError(f"unknown columns: {sorted(unknown)}")
-    out_schema = T.StructType([TRANSCRIPT_SCHEMA[c] for c in cols])
-    blocks = ckpt.committed_blocks(io)
+    blocks = snap.blocks()
     if buckets is not None:
-        blocks = blocks.where(blocks.bucket.isin([int(b) for b in buckets]))
+        blocks = blocks.where(
+            F.col("bucket").isin([b if isinstance(b, Column) else int(b) for b in buckets])
+        )
     if ts_range is not None:
         lo, hi = ts_range
         # interval overlap; null stats (legacy/all-null blocks) pass.
@@ -126,11 +129,23 @@ def decode_table(
             (F.col("conv_min").isNull() | (F.col("conv_min") <= F.lit(chi)))
             & (F.col("conv_max").isNull() | (F.col("conv_max") >= F.lit(clo)))
         )
+    return _decode_blocks(blocks, cols, on_error == "skip", arrow_native)
+
+
+def _decode_blocks(
+    blocks: DataFrame, cols: list[str], skip_errors: bool = False, arrow_native: bool = True
+) -> DataFrame:
+    """Block rows (already scoped by the caller) → transcript rows of
+    ``cols``: the one decode mapper of every read path, maintenance's
+    scoped rewrites included. Only the ``cols`` binary columns are
+    selected, so the blocks scan reads no other block bytes."""
+    import pyspark.sql.types as T
+
+    out_schema = T.StructType([TRANSCRIPT_SCHEMA[c] for c in cols])
     blocks = blocks.select(*[f"{c}_blk" for c in cols])
-    skip = on_error == "skip"
     if arrow_native:
-        return blocks.mapInArrow(_decode_batches_arrow_cols(cols, skip), schema=out_schema)
-    return blocks.mapInPandas(_decode_batches_cols(cols, skip), schema=out_schema)
+        return blocks.mapInArrow(_decode_batches_arrow_cols(cols, skip_errors), schema=out_schema)
+    return blocks.mapInPandas(_decode_batches_cols(cols, skip_errors), schema=out_schema)
 
 
 def _decode_batches_cols(cols: list[str], skip_errors: bool = False):
@@ -215,7 +230,7 @@ def corrupt_blocks(spark: SparkSession, io) -> DataFrame:
                 columns=["bucket", "salt", "chunk", "column", "error"],
             )
 
-    blocks = ckpt.committed_blocks(io).select(
+    blocks = ckpt.ReadSnapshot(io).blocks().select(
         "bucket", "salt", "chunk", *[f"{c}_blk" for c in ENCODED_COLUMNS]
     )
     return blocks.mapInPandas(
@@ -266,49 +281,25 @@ def decode_conversation(
     """Point lookup: decode one conversation's turns.
 
     Uses the engine's own partitioning as an index: candidate buckets =
-    {pmod(xxhash64(conv_id), nb) for every bucketing that ever wrote
-    (table_meta)} → blocks scan prunes to those buckets → final row
-    filter. At 10^12 turns this touches ~1/num_buckets of the table
-    instead of all of it. ``ts_range=(lo, hi)`` composes the time-slice
+    {pmod(xxhash64(conv_id), nb) for every bucketing a visible run
+    recorded (the snapshot's table_meta rows)} → blocks scan prunes to
+    those buckets → final row filter. The candidates are constant
+    expressions Catalyst folds into the scan's pushed filter, and
+    visibility is resolved once, so no job runs before the decode. At
+    10^12 turns this touches ~1/num_buckets of the table instead of
+    all of it. ``ts_range=(lo, hi)`` composes the time-slice
     selector on top: ts zone maps prune further and the exact window
     filter applies to the decoded rows (CLI: --conv-id with
     --ts-from/--ts-to)."""
     from pyspark.sql import functions as F
 
-    buckets = None
-    if io.exists(ckpt.TABLE_META):
-        from .schema import TABLE_META_SCHEMA
-
-        meta = io.read(ckpt.TABLE_META, TABLE_META_SCHEMA)
-        # ONE pre-decode job computes every candidate bucket AND probes
-        # for visible runs missing their geometry row (a legacy-engine
-        # crash between manifest and meta appends — current engine
-        # writes meta first, so only old tables can be in that state):
-        # left-join visible run_ids against meta and hash the literal
-        # conv_id under each recorded bucketing in the same plan. A
-        # null num_buckets row means some visible run has unknown
-        # geometry → bucket pruning would silently miss its rows, so
-        # fall back to the unpruned scan.
-        vis_runs = ckpt.visible_triples(io).select("run_id").distinct()
-        rows = (
-            vis_runs.join(meta.select("run_id", "num_buckets"), "run_id", "left")
-            .select(
-                "num_buckets",
-                F.pmod(F.xxhash64(F.lit(conv_id)), F.col("num_buckets"))
-                .cast("int")
-                .alias("b"),
-            )
-            .distinct()
-            .collect()
-        )
-        if rows and all(r["num_buckets"] is not None for r in rows):
-            buckets = sorted({r["b"] for r in rows})
+    snap = ckpt.ReadSnapshot(io)
     # tables written before table_meta existed (or with meta-less
     # visible runs) fall back to a full scan; within the candidate
     # buckets, conv zone maps prune further — only blocks whose
     # [conv_min, conv_max] covers this id decode at all
-    df = decode_table(
-        spark, io, buckets=buckets, arrow_native=arrow_native,
+    df = _decode(
+        snap, buckets=snap.bucket_predicates(conv_id), arrow_native=arrow_native,
         on_error=on_error, conv_range=(conv_id, conv_id), ts_range=ts_range,
     )
     df = df.where(F.col("conv_id") == conv_id)

@@ -9,12 +9,15 @@ These helpers keep metadata-sized frames on the fast paths:
 
 * :func:`local_df` — build via Arrow (a JVM LocalRelation: ~0.2 s
   evaluation, no Python workers);
-* :func:`empty_df` — an empty frame as a projected ``range(0)``
-  (pure JVM, no RDD at all);
+* :func:`empty_df` — an empty frame with exactly the given schema, as
+  an empty Arrow local relation (no RDD at all);
 * :func:`write_local_parquet` — write driver-local rows as ONE parquet
   file via pyarrow directly (no Spark job; for driver-owned metadata
   directories like index centroids, not for ``TableIO``-managed
-  tables).
+  tables);
+* :func:`driver_fs_path` — whether a Spark path is on the driver's own
+  filesystem, the precondition of every driver-side pyarrow read or
+  write.
 
 Only for METADATA-sized data (centroids, manifests rows, summaries):
 anything row-scale must stay distributed.
@@ -22,16 +25,19 @@ anything row-scale must stay distributed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
 def empty_df(spark: SparkSession, schema: StructType) -> DataFrame:
-    """Empty DataFrame with ``schema`` — a projected ``range(0)``
-    (LocalRelation after optimization) instead of an empty Python RDD
-    whose evaluation still schedules ``defaultParallelism`` tasks."""
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    """Empty DataFrame whose schema EQUALS ``schema`` — nullability and
+    field metadata included — as an empty Arrow local relation: no
+    Python RDD, and evaluating it schedules no job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        pa.Table.from_batches([], schema=to_arrow_schema(schema)), schema
     )
 
 
@@ -100,3 +106,23 @@ def write_local_parquet(path: str, table) -> None:
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     pq.write_table(table, os.path.join(path, "part-00000.parquet"), compression="snappy")
+
+
+def driver_fs_path(spark: SparkSession, path: str) -> str | None:
+    """Driver filesystem path of ``path`` when Spark resolves it to the
+    local filesystem: an explicit ``file://`` URI, or a scheme-less path
+    while the Hadoop default filesystem is local. None otherwise — Spark
+    resolves a scheme-less path against ``fs.defaultFS`` (hdfs://,
+    s3a://…), so driver-side pyarrow I/O on it would read or write a
+    different filesystem than Spark's."""
+    from urllib.parse import urlparse
+
+    u = urlparse(path)
+    if u.scheme == "file":
+        return u.path
+    if u.scheme:
+        return None
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(  # noqa: SLF001
+        "fs.defaultFS", "file:///"
+    )
+    return path if urlparse(default_fs).scheme in ("", "file") else None

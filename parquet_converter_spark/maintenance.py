@@ -38,18 +38,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import checkpoint as ckpt
-from .decode_job import decode_table
+from .decode_job import _decode_blocks, decode_table
 from .encode_job import encode_table
 from .schema import BLOCKS_STORED_SCHEMA, ENCODED_COLUMNS
 
 
-def _visible_group_stats(io) -> DataFrame:
+def _visible_group_stats(snap) -> DataFrame:
     """Per visible (bucket, salt, run_id): chunk/row/byte totals from
     the manifest (tiny — one row per group, no blocks read)."""
-    m = ckpt.read_manifest(io).where(F.col("status") == "done")
+    m = ckpt.read_manifest(snap.io).where(F.col("status") == "done")
     return (
-        m.join(ckpt.visible_triples(io), ["bucket", "salt", "run_id"], "left_semi")
-        .groupBy("bucket", "salt", "run_id")
+        m.join(snap.visible, ckpt.TRIPLE, "left_semi")
+        .groupBy(*ckpt.TRIPLE)
         .agg(
             F.sum("n_chunks").alias("n_chunks"),
             F.sum("n_rows").alias("n_rows"),
@@ -88,33 +88,22 @@ def _decode_triples(
     n_keys: int | None = None,
 ) -> DataFrame:
     """Decode ONLY the given (bucket, salt, run_id) triples' blocks —
-    the maintenance read path. Same vectorized mapInArrow decode as
-    decode_table, scoped by a semi-join on the triple list (broadcast
+    the maintenance read path. decode_table's own block mapper, scoped
+    by a semi-join on the triple list (broadcast
     only when it provably fits — a cold compact at 10^12 turns can
     select millions of groups, same guard as the resume join).
     ``cols`` projects a column subset: only those columns' binary
     blocks are read at all (the convergence guard decodes just the
     key columns, never the text). ``n_keys``: the triple count when the
     caller already aggregated it — skips the probe job."""
-    keys = triples.select("bucket", "salt", "run_id")
+    keys = triples.select(*ckpt.TRIPLE)
     if n_keys is None:
-        n_keys = keys.limit(2_000_001).count()
-    if n_keys <= 2_000_000:
+        n_keys = keys.limit(ckpt.DRIVER_MANIFEST_ROWS + 1).count()
+    if n_keys <= ckpt.DRIVER_MANIFEST_ROWS:
         keys = F.broadcast(keys)
-    blocks = io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA).join(
-        keys, ["bucket", "salt", "run_id"], "left_semi"
-    )
-    from .decode_job import _decode_batches_arrow_cols
-
-    import pyspark.sql.types as T
-
-    from .schema import TRANSCRIPT_SCHEMA
-
+    blocks = io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA).join(keys, ckpt.TRIPLE, "left_semi")
     cols = list(ENCODED_COLUMNS) if cols is None else list(cols)
-    out_schema = T.StructType([TRANSCRIPT_SCHEMA[c] for c in cols])
-    return blocks.select(*[f"{c}_blk" for c in cols]).mapInArrow(
-        _decode_batches_arrow_cols(cols, False), schema=out_schema
-    )
+    return _decode_blocks(blocks, cols)
 
 
 def compact_blocks(
@@ -152,7 +141,7 @@ def compact_blocks(
     if not 0.0 < min_fill <= 1.0:
         raise ValueError(f"min_fill must be in (0, 1], got {min_fill}")
     recover_vacuum(io)
-    stats = _visible_group_stats(io)
+    stats = _visible_group_stats(ckpt.ReadSnapshot(io))
     small = stats.where(
         (F.col("n_rows") / F.greatest(F.col("n_chunks"), F.lit(1)))
         < F.lit(min_fill * chunk_rows)
@@ -292,9 +281,7 @@ def retention_sweep(
     it is a single manifest append with no data read or rewrite risk.
     """
     recover_vacuum(io)
-    blocks = io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA).join(
-        ckpt.visible_triples(io), ["bucket", "salt", "run_id"], "left_semi"
-    )
+    blocks = ckpt.ReadSnapshot(io).blocks()
     # stats-only scan: the binary block columns are pruned from the read.
     # Null-ts rows are NEVER provably old (the sweep keeps them), so the
     # proofs need the ts_nulls block statistic: min/max skip nulls, and a
@@ -470,11 +457,18 @@ def reclaimable_bytes(io, repair: bool = True) -> int:
         recover_vacuum(io)
     if not io.exists(ckpt.BLOCKS):
         return 0
-    blocks = io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA).select(
-        "bucket", "salt", "run_id", "blk_bytes"
-    )
-    dead = blocks.join(ckpt.visible_triples(io), ["bucket", "salt", "run_id"], "left_anti")
+    dead = _dead_blocks(ckpt.ReadSnapshot(io))
     return int(dead.agg(F.sum("blk_bytes").alias("b")).collect()[0]["b"] or 0)
+
+
+def _dead_blocks(snap) -> DataFrame:
+    """(triple, blk_bytes) of every block row no reader of ``snap`` can
+    see — retired triples and orphaned attempts; binary columns pruned."""
+    return (
+        snap.io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA)
+        .select(*ckpt.TRIPLE, "blk_bytes")
+        .join(snap.visible, ckpt.TRIPLE, "left_anti")
+    )
 
 
 def vacuum_blocks(spark: SparkSession, io) -> dict:
@@ -511,17 +505,16 @@ def vacuum_blocks(spark: SparkSession, io) -> dict:
     # a reclaimable-bytes sum plus a separate dead-row probe): decide
     # on dead ROWS, not bytes — aborted-commit orphans include 0-byte
     # error-marker rows that still deserve removal
+    snap = ckpt.ReadSnapshot(io)
     dead = (
-        io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA)
-        .select("bucket", "salt", "run_id", "blk_bytes")
-        .join(ckpt.visible_triples(io), ["bucket", "salt", "run_id"], "left_anti")
+        _dead_blocks(snap)
         .agg(F.count("*").alias("rows"), F.sum("blk_bytes").alias("bytes"))
         .collect()[0]
     )
     freed = int(dead["bytes"] or 0)
     if int(dead["rows"] or 0) == 0:
         return {"bytes_reclaimed": 0, "rows_kept": -1}
-    visible = ckpt.committed_blocks(io)
+    visible = snap.blocks()
     tmp_path = io.path(ckpt.BLOCKS) + "__vacuum"
     visible.write.mode("overwrite").option("compression", "uncompressed").parquet(tmp_path)
     rows_kept = spark.read.parquet(tmp_path).count()

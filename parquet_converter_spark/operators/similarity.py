@@ -802,9 +802,9 @@ def ivf_build_index(
     # constructor so even that path pays no Python-RDD evaluation —
     # the metadata then lands on the same filesystem as the vectors.
     # spark.read.parquet reads both layouts.
-    from ..localframe import local_df, write_local_parquet
+    from ..localframe import driver_fs_path, local_df, write_local_parquet
 
-    base = _driver_fs_path(spark, index_dir)
+    base = driver_fs_path(spark, index_dir)
     if base is not None:
         import pyarrow as pa
 
@@ -850,33 +850,15 @@ def ivf_build_index(
     }
 
 
-def _driver_fs_path(spark, index_dir: str) -> str | None:
-    """Driver filesystem path of ``index_dir`` when Spark resolves it
-    to the local filesystem: an explicit ``file://`` URI, or a
-    scheme-less path while the Hadoop default filesystem is local.
-    None otherwise — Spark resolves a scheme-less path against
-    ``fs.defaultFS`` (hdfs://, s3a://…), so driver-side pyarrow I/O on
-    it would split the index across two filesystems."""
-    from urllib.parse import urlparse
-
-    u = urlparse(index_dir)
-    if u.scheme == "file":
-        return u.path
-    if u.scheme:
-        return None
-    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(  # noqa: SLF001
-        "fs.defaultFS", "file:///"
-    )
-    return index_dir if urlparse(default_fs).scheme in ("", "file") else None
-
-
 def _local_index_path(spark, index_dir: str, name: str) -> str | None:
     """Filesystem path for a driver-readable index metadata dir, or
     None when the index lives on a remote filesystem and must go
     through a Spark read."""
     import os
 
-    base = _driver_fs_path(spark, index_dir)
+    from ..localframe import driver_fs_path
+
+    base = driver_fs_path(spark, index_dir)
     if base is None:
         return None
     p = os.path.join(base, name)

@@ -1,4 +1,4 @@
-"""Spark job budget of the encode commit and of compaction.
+"""Spark job budgets of the encode commit, of compaction and of reads.
 
 ``encode_table`` runs as four sequential steps (probe → row estimate →
 blocks ‖ table_meta → manifest ‖ metrics); the side appends run on an
@@ -6,17 +6,33 @@ blocks ‖ table_meta → manifest ‖ metrics); the side appends run on an
 sees them too. The pinned counts fail on any added job — a re-read of
 the manifest or blocks for the summary, a separate resume probe, a
 parquet schema inference — and on a side append that escaped the job
-group."""
+group.
+
+Every read opens one ``checkpoint.ReadSnapshot``; on a local table it
+resolves the format gate, visibility and a point lookup's candidate
+buckets with no Spark job, so a read's budget is its sink's own jobs."""
 
 from __future__ import annotations
 
 import threading
 
+import pyspark.sql.types as T
 import pytest
 
+from parquet_converter_spark import checkpoint as ckpt
+from parquet_converter_spark.decode_job import (
+    decode_conversation,
+    decode_table,
+    decode_time_slice,
+)
 from parquet_converter_spark.encode_job import encode_table
+from parquet_converter_spark.localframe import empty_df
 from parquet_converter_spark.maintenance import compact_blocks
-from parquet_converter_spark.schema import TRANSCRIPT_SCHEMA
+from parquet_converter_spark.schema import (
+    BLOCKS_STORED_SCHEMA,
+    MANIFEST_SCHEMA,
+    TRANSCRIPT_SCHEMA,
+)
 from parquet_converter_spark.synth import synth_pandas
 from parquet_converter_spark.tableio import ParquetDirTableIO
 
@@ -24,10 +40,11 @@ from parquet_converter_spark.tableio import ParquetDirTableIO
 WARM_APPEND_EXECUTIONS = 6
 #: probe 2 + row estimate 2 + blocks 2 + table_meta 1 + manifest 2 + metrics 2
 WARM_APPEND_JOBS = 11
-#: pinned visible-group stats 5 + their counts 2 + the rewrite's encode,
-#: which has neither probe nor row estimate (blocks 3 + table_meta 1 +
-#: manifest 2 + metrics 2); no error probe, no blocks_after re-read
-COMPACT_JOBS = 15
+#: pinned visible-group stats 3 (visibility comes from the read
+#: snapshot, no job) + their counts 2 + the rewrite's encode, which has
+#: neither probe nor row estimate (blocks 3 + table_meta 1 + manifest 2 +
+#: metrics 2); no error probe, no blocks_after re-read
+COMPACT_JOBS = 13
 
 
 def _jobs(spark, group: str, fn):
@@ -102,3 +119,49 @@ def test_zero_group_rerun_observation_returns(spark, batches, tmp_path_factory):
     assert (s["groups"], s["errors"], s["rows"], s["encoded_bytes"], s["chunks"]) == (
         0, 0, 0, 0, 0
     )
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_read_path_job_budget(spark, batches, tmp_path_factory):
+    """Jobs per read on a local table with two runs under two
+    bucketings: the snapshot itself runs none; a full or projected
+    decode to a no-op sink runs 2 (the visible set's broadcast and the
+    sink), a time slice at most 2 and a point lookup at most 3. Without
+    the snapshot a full decode ran 6: 2 for a format-version aggregate
+    and 3 for a two-distinct anti-join broadcast."""
+    io = ParquetDirTableIO(spark, str(tmp_path_factory.mktemp("reads")))
+    encode_table(spark, batches[0], io, run_id="a", salt_rows=256, num_buckets=4)
+    encode_table(spark, batches[1], io, run_id="b", salt_rows=256, num_buckets=8)
+    row = batches[1].select("conv_id", "ts").first()
+
+    def jobs(name, fn) -> int:
+        return _jobs(spark, f"read-{name}", fn)[1]
+
+    assert jobs("snapshot", lambda: ckpt.ReadSnapshot(io)) == 0
+    assert jobs("full", lambda: _noop(decode_table(spark, io))) == 2
+    proj = ["conv_id", "turn_idx"]
+    assert jobs("projected", lambda: _noop(decode_table(spark, io, columns=proj))) == 2
+    assert jobs("slice", lambda: _noop(decode_time_slice(spark, io, row["ts"], row["ts"]))) <= 2
+    assert jobs("point", lambda: _noop(decode_conversation(spark, io, row["conv_id"]))) <= 3
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        MANIFEST_SCHEMA,
+        BLOCKS_STORED_SCHEMA,
+        T.StructType([T.StructField("k", T.LongType(), False, {"comment": "kept"})]),
+    ],
+    ids=["manifest", "blocks", "metadata"],
+)
+def test_empty_df_keeps_schema_and_runs_no_job(spark, schema):
+    """The read snapshot returns ``empty_df`` for absent tables: it must
+    carry the pinned schema exactly (nullability and field metadata)
+    and stay a local relation whose evaluation schedules no job."""
+    df = empty_df(spark, schema)
+    assert df.schema == schema
+    rows, jobs, _ = _jobs(spark, "empty-df", df.collect)
+    assert (rows, jobs) == ([], 0)

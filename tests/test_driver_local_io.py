@@ -17,7 +17,7 @@ from datetime import datetime, timezone
 import numpy as np
 import pytest
 
-from parquet_converter_spark.localframe import local_df
+from parquet_converter_spark.localframe import driver_fs_path, local_df
 from parquet_converter_spark.operators import similarity
 
 
@@ -75,8 +75,8 @@ def test_ivf_index_metadata_follows_non_local_default_fs(spark, tmp_path, monkey
     hconf.set(f"fs.viewfs.mounttable.pcstest.link.{top}", f"file://{top}")
     hconf.set("fs.defaultFS", "viewfs://pcstest/")
     try:
-        assert similarity._driver_fs_path(spark, idx) is None  # noqa: SLF001
-        assert similarity._driver_fs_path(spark, f"file://{idx}") == idx  # noqa: SLF001
+        assert driver_fs_path(spark, idx) is None
+        assert driver_fs_path(spark, f"file://{idx}") == idx
         info = similarity.ivf_build_index(spark, df, idx, n_cells=2, sample_n=40)
         got = similarity.ivf_query(spark, idx, axes[0].tolist(), k=3, n_probe=1).collect()
     finally:
@@ -85,4 +85,4 @@ def test_ivf_index_metadata_follows_non_local_default_fs(spark, tmp_path, monkey
     assert info["cells"] == 2 and info["rows"] == 40
     assert len(got) == 3 and all(r["vec_id"] % 2 == 0 for r in got)
     # with the local default restored, the same dir is driver-local again
-    assert similarity._driver_fs_path(spark, idx) == idx  # noqa: SLF001
+    assert driver_fs_path(spark, idx) == idx

@@ -545,8 +545,8 @@ def test_point_lookup_single_pre_decode_job(
     spark, transcripts, tmp_path_factory, monkeypatch
 ):
     """decode_conversation computes ALL candidate buckets (one per
-    recorded bucketing) plus the meta-coverage probe in ONE collect —
-    not one tiny Spark job per bucketing."""
+    recorded bucketing) plus the meta-coverage probe without any
+    collect — not one tiny Spark job per bucketing."""
     import pyspark.sql.classic.dataframe as cdf
 
     from parquet_converter_spark.decode_job import decode_conversation
@@ -569,10 +569,11 @@ def test_point_lookup_single_pre_decode_job(
 
     monkeypatch.setattr(cdf.DataFrame, "collect", counting)
     df = decode_conversation(spark, io, conv)
-    # exactly 2 pre-decode collects: the format_version check + the ONE
-    # combined candidates/meta-coverage job (the old shape paid
-    # 2 + one per distinct bucketing)
-    assert len(calls) == 2, len(calls)
+    # no pre-decode collect: the read snapshot answers the format gate
+    # and meta coverage, and the candidate buckets are constant
+    # expressions folded into the scan filter (the old shape paid one
+    # collect per distinct bucketing, then 2)
+    assert len(calls) == 0, len(calls)
     monkeypatch.setattr(cdf.DataFrame, "collect", orig)
     got = {r["turn_idx"] for r in df.collect()}
     expected = {

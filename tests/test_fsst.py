@@ -123,3 +123,66 @@ def test_vectorized_kernel_random_bytes():
         data = rng.integers(0, 256, size, dtype=np.uint8).tobytes()
         syms = build_symbol_table(data)
         assert decompress(compress_vectorized(data, syms), syms) == data
+
+
+# ---- uint64 window packing ≡ the former void-dtype view ------------------
+# build_symbol_table counts n-gram windows by packing each into a
+# big-endian uint64 (fsst._pack_windows). The void-dtype view it
+# replaced is the oracle: np.unique over void items compares them with
+# memcmp, the order the packing must reproduce.
+
+
+def _void_pack(arr: np.ndarray, length: int) -> np.ndarray:
+    windows = np.lib.stride_tricks.sliding_window_view(arr, length)
+    return np.ascontiguousarray(windows).view(np.dtype((np.void, length))).ravel()
+
+
+def _void_unpack(uniq: np.ndarray, length: int) -> np.ndarray:
+    return uniq.view(np.uint8).reshape(-1, length)
+
+
+def _window_corpus() -> np.ndarray:
+    """Repeated n-grams over the full byte range, 0x00 and 0xFF
+    included, so high-bit and zero bytes meet in every window position."""
+    g = np.random.default_rng(5)
+    grams = [g.integers(0, 256, size=int(g.integers(1, 9)), dtype=np.uint8) for _ in range(40)]
+    grams += [np.zeros(8, np.uint8), np.full(8, 0xFF, np.uint8)]
+    grams.append(np.array([0xFF, 0, 0xFF], np.uint8))
+    return np.concatenate([grams[i] for i in g.integers(0, len(grams), size=3_000)])
+
+
+@pytest.mark.parametrize("length", range(1, 9))
+def test_window_packing_matches_void_view(length):
+    from parquet_converter_spark.codecs import fsst
+
+    arr = _window_corpus()
+    pu, pc = np.unique(fsst._pack_windows(arr, length), return_counts=True)
+    vu, vc = np.unique(_void_pack(arr, length), return_counts=True)
+    assert pu.size == vu.size > 1
+    # same uniques, in the same order, with the same counts
+    assert np.array_equal(fsst._unpack_windows(pu, length), _void_unpack(vu, length))
+    assert np.array_equal(pc, vc)
+
+
+def test_packed_training_gives_void_view_tables_and_blocks(monkeypatch):
+    """Byte-identical symbol tables and encoded fsst blocks on a fixed
+    corpus, trained once with the packing and once with the void view."""
+    import pandas as pd
+
+    from parquet_converter_spark.codecs import fsst
+    from parquet_converter_spark.codecs.blocks import encode_block
+    from parquet_converter_spark.synth import synth_pandas
+
+    texts = synth_pandas(n_convs=40, seed=5)["text"]
+    corpus = "\n".join(texts.dropna()).encode()
+    raw = bytes(_window_corpus())
+    packed = [build_symbol_table(corpus), build_symbol_table(raw)]
+    blocks = [encode_block(texts, "str", codec="fsst"),
+              encode_block(pd.Series([raw.decode("latin-1")] * 3), "str", codec="fsst")]
+
+    monkeypatch.setattr(fsst, "_pack_windows", _void_pack)
+    monkeypatch.setattr(fsst, "_unpack_windows", _void_unpack)
+    assert [build_symbol_table(corpus), build_symbol_table(raw)] == packed
+    assert len(packed[0]) == fsst.MAX_SYMBOLS
+    assert [encode_block(texts, "str", codec="fsst"),
+            encode_block(pd.Series([raw.decode("latin-1")] * 3), "str", codec="fsst")] == blocks
