@@ -25,3 +25,10 @@ no per-row Python in the hot path.
 """
 
 __version__ = "0.1.0"
+
+from pyspark import TaskContext as _TaskContext
+
+if _TaskContext.get() is not None:  # inside a worker's task: see pyworker.py
+    from parquet_converter_spark import pyworker as _pyworker
+
+    _pyworker.install()

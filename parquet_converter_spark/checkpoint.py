@@ -31,6 +31,13 @@ attempt — is collected once with Spark.
 The fork exists because a 10^12-turn table's manifest has millions of
 groups: that per-group frame is never collected.
 
+The driver path still costs a read one Spark job before its sink: Spark
+collects the local relation under its ``BroadcastExchange`` through a
+job (4 tasks at local[4], no Python worker), so a full decode runs 2
+jobs. Measured and kept: on the 200k-turn benchmark ``scan`` table that
+job took 15–29 ms of a 0.44–0.58 s full decode at local[4], while the
+five metadata jobs the snapshot replaced took ~0.4 s of each decode.
+
 A read's metadata is fixed when its snapshot opens: the format gate
 and the bucketings on both paths, and the visible set on the driver
 path (the fallback's visible set is a lazy plan, re-read by each

@@ -131,9 +131,11 @@ def compact_blocks(
     ``max_groups`` bounds ONE maintenance window: a cold compact of a
     10^12-turn table can qualify millions of groups, and an unbounded
     rewrite stakes them all on a single all-or-nothing commit. With
-    the bound, each call rewrites the first ``max_groups`` qualifying
-    groups (deterministic (bucket, salt, run_id) order) in its own
-    independently crash-safe commit; repeat until
+    the bound, each call rewrites the ``max_groups`` qualifying groups
+    holding the most blocks (ties in (bucket, salt, run_id) order, so
+    the window is deterministic) in its own independently crash-safe
+    commit — a window of single-block groups could never pass the
+    convergence guard below while fuller groups wait; repeat until
     ``compacted_groups == 0`` — already-compacted groups fall out of
     the qualifying set, so iteration converges to the same final state
     as one-shot.
@@ -147,7 +149,9 @@ def compact_blocks(
         < F.lit(min_fill * chunk_rows)
     )
     if max_groups is not None:
-        small = small.orderBy("bucket", "salt", "run_id").limit(int(max_groups))
+        small = small.orderBy(
+            F.desc("n_chunks"), "bucket", "salt", "run_id"
+        ).limit(int(max_groups))
     small = small.localCheckpoint(eager=True)  # pin the qualifying set:
     # the rewrite itself appends manifest rows, and a lazy `small`
     # re-evaluated after the commit would see them

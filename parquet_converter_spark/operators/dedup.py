@@ -282,14 +282,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
 
     ``fan_out``-guarded like minhash_signatures: the tokenize + 64-sum
     partial aggregation must not serialize on a one-split scan."""
-    from ..parallel import fan_out
-
-    tokens = F.filter(F.split(F.trim(F.col(text_col)), " "), lambda t: t != "")
-    exploded = fan_out(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), F.explode(tokens).alias("tok")
-    ).select(
-        id_col, F.xxhash64("tok").alias("h")
-    )
+    exploded = _token_hashes(df, text_col, id_col)
     # PACKED bit votes (r6): two 32-bit-field counters per 64-bit sum —
     # 32 aggregate expressions instead of 64 for the identical result
     # (measured ~35% faster aggregate; bit votes per doc are bounded by
@@ -302,7 +295,25 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
             F.shiftrightunsigned("h", 2 * a + 1).bitwiseAND(F.lit(1)), 32
         )
         aggs.append(F.sum(lo + hi).alias(f"p{a}"))
-    votes = exploded.groupBy(id_col).agg(*aggs)
+    return _vote_bits(exploded.groupBy(id_col).agg(*aggs), id_col)
+
+
+def _token_hashes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, h): the xxhash64 of every whitespace-separated token."""
+    from ..parallel import fan_out
+
+    tokens = F.filter(F.split(F.trim(F.col(text_col)), " "), lambda t: t != "")
+    return fan_out(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+        F.col(id_col), F.explode(tokens).alias("tok")
+    ).select(
+        id_col, F.xxhash64("tok").alias("h")
+    )
+
+
+def _vote_bits(votes: DataFrame, id_col: str) -> DataFrame:
+    """SimHash from packed votes: ``p{a}`` holds bit 2a's vote count in
+    its low 32 bits and bit 2a+1's in its high 32; a bit is set when at
+    least half of the ``n_tok`` tokens vote for it."""
     sh = F.lit(0).cast("long")
     mask = (1 << 32) - 1
     for a in range(32):

@@ -66,15 +66,7 @@ def numeric_profile(df: DataFrame, col: str) -> DataFrame:
         )
     from ..localframe import local_df
 
-    stats = df.agg(
-        F.min(c).alias("mn"),
-        F.max(c).alias("mx"),
-        F.avg(c).alias("mean"),
-        F.stddev_samp(c).alias("sd"),
-        F.count(c).alias("cnt"),
-        F.count(F.when(F.isnan(c), 1)).alias("nan_cnt"),
-        F.max(F.when(~F.isnan(c), c)).alias("mx_real"),
-    ).collect()[0]
+    stats = _double_stats(df, col)
     med = _exact_median_twopass(df, col, stats)
     out = local_df(
         df.sparkSession,
@@ -97,6 +89,21 @@ _MEDIAN_BUCKETS = 8192
 #: pinpoint-pass collect guard: a bucket bigger than this (heavy
 #: duplicate skew) falls back to the builtin median aggregate
 _MEDIAN_COLLECT_CAP = 4_000_000
+
+
+def _double_stats(df: DataFrame, col: str):
+    """One aggregate over a double column: the profile's moments plus
+    the counts and real-valued bounds ``_exact_median_twopass`` reads."""
+    c = F.col(col)
+    return df.agg(
+        F.min(c).alias("mn"),
+        F.max(c).alias("mx"),
+        F.avg(c).alias("mean"),
+        F.stddev_samp(c).alias("sd"),
+        F.count(c).alias("cnt"),
+        F.count(F.when(F.isnan(c), 1)).alias("nan_cnt"),
+        F.max(F.when(~F.isnan(c), c)).alias("mx_real"),
+    ).collect()[0]
 
 
 def _exact_median_twopass(df: DataFrame, col: str, stats) -> float | None:

@@ -32,6 +32,16 @@ def source(spark):
     return spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA).cache()
 
 
+def _encode_two_runs(spark, source, io):
+    """Two runs of different geometry over two thirds of ``source``;
+    returns the three thirds."""
+    thirds = [source.where(F.col("turn_idx") % 3 == k) for k in range(3)]
+    for k, part in enumerate(thirds[:2]):
+        encode_table(spark, part, io, run_id=f"r{k}", salt_rows=512, chunk_rows=16,
+                     num_buckets=4 + 4 * k, resume=False)
+    return thirds
+
+
 @pytest.fixture(scope="module")
 def table(spark, source, tmp_path_factory):
     """done, error and retired manifest rows; orphan blocks of an
@@ -39,10 +49,7 @@ def table(spark, source, tmp_path_factory):
     ``_temporary/`` directory and a ``.crc`` file in ``manifest/``; a
     legacy ``table_meta`` file without the geometry columns."""
     io = ParquetDirTableIO(spark, str(tmp_path_factory.mktemp("snap")))
-    thirds = [source.where(F.col("turn_idx") % 3 == k) for k in range(3)]
-    for k, part in enumerate(thirds[:2]):
-        encode_table(spark, part, io, run_id=f"r{k}", salt_rows=512, chunk_rows=16,
-                     num_buckets=4 + 4 * k, resume=False)
+    thirds = _encode_two_runs(spark, source, io)
     # a bounded compaction retires SOME triples and leaves others done
     assert compact_blocks(spark, io, chunk_rows=4096, max_groups=8)["compacted_groups"] == 8
 
@@ -149,3 +156,18 @@ def test_newer_format_fails_every_read_alike(spark, source, tmp_path, monkeypatc
     with pytest.raises(ValueError) as point:
         decode_conversation(spark, io, source.select("conv_id").first()[0])
     assert str(point.value) == str(full.value)
+
+
+def test_bounded_compaction_takes_the_fullest_groups_first(spark, source, tmp_path):
+    """A ``max_groups`` window holds the qualifying groups with the most
+    blocks. Here the first three qualifying groups in key order hold one
+    block each, which no rewrite can shrink, so a key-order window was
+    skipped whole while other groups held 10–11 blocks."""
+    io = ParquetDirTableIO(spark, str(tmp_path / "t"))
+    _encode_two_runs(spark, source, io)
+    r = compact_blocks(spark, io, chunk_rows=4096, max_groups=3)
+    assert r.get("skipped") is None, r
+    assert r["compacted_groups"] == 3
+    assert r["blocks_after"] < r["blocks_before"]
+    assert verify_decode_digest(decode_table(spark, io), source.where(
+        F.col("turn_idx") % 3 != 2))["ok"]
