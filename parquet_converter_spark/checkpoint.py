@@ -14,29 +14,48 @@ against the manifest's visible (bucket, salt, run_id) triples.
 Every read entry point — decode, verify, maintenance, ``cli report`` —
 opens ONE :class:`ReadSnapshot` and asks it every metadata question of
 that read: the table format gate, the visible triple set and the
-bucketings a point lookup hashes into. On a parquet-dir table whose
-root is on the driver's filesystem (``localframe.driver_fs_path``) and
-whose manifest holds at most ``DRIVER_MANIFEST_ROWS`` rows (parquet
-footer count, no data read), the snapshot resolves all of it with
-pyarrow and runs ZERO Spark jobs: ``table_meta`` and the manifest's
-four small columns are read under the pinned schemas, ``done −
-retired`` is one Arrow group-by, and a visible set of at most
-``DRIVER_VISIBLE_ROWS`` triples enters Spark as an Arrow local
-relation, broadcast into the blocks left-semi join. Any other table
-(Iceberg, a remote filesystem, a larger manifest or visible set) gets
-the same semi-join shape over one distributed single-pass aggregate,
-``max(status = 'done')`` and ``max(status = 'retired')`` per triple;
-off the driver's filesystem ``table_meta`` — one row per encode
-attempt — is collected once with Spark.
+bucketings a point lookup hashes into; ``ReadSnapshot.where_visible``
+restricts any frame keyed by the triple to what readers see. On a
+parquet-dir table whose root is on the driver's filesystem
+(``localframe.driver_fs_path``) and whose manifest holds at most
+``DRIVER_MANIFEST_ROWS`` rows (parquet footer count, no data read), the
+snapshot resolves all of it with pyarrow and runs ZERO Spark jobs:
+``table_meta`` and the manifest's four small columns are read under the
+pinned schemas and ``done − retired`` is one Arrow group-by. A visible
+set of at most ``PREDICATE_VISIBLE_ROWS`` triples then reaches Spark as
+a literal predicate on the scan it restricts (``_member_of``), so a
+read runs its sink's jobs only; one of at most ``DRIVER_VISIBLE_ROWS``
+enters as an Arrow local relation, broadcast into a left-semi join.
+Any other table (Iceberg, a remote filesystem, a larger manifest or
+visible set) gets the same semi-join shape over one distributed
+single-pass aggregate, ``max(status = 'done')`` and ``max(status =
+'retired')`` per triple; off the driver's filesystem ``table_meta`` —
+one row per encode attempt — is collected once with Spark.
 The fork exists because a 10^12-turn table's manifest has millions of
 groups: that per-group frame is never collected.
 
-The driver path still costs a read one Spark job before its sink: Spark
-collects the local relation under its ``BroadcastExchange`` through a
-job (4 tasks at local[4], no Python worker), so a full decode runs 2
-jobs. Measured and kept: on the 200k-turn benchmark ``scan`` table that
-job took 15–29 ms of a 0.44–0.58 s full decode at local[4], while the
-five metadata jobs the snapshot replaced took ~0.4 s of each decode.
+Why a predicate first: the broadcast relation costs every read more
+than its own job. Spark collects the local relation under its
+``BroadcastExchange`` through a job, and AQE re-plans the query when
+that job ends, before the read's one stage starts. On the 200k-turn
+benchmark ``scan`` table at local[4], 8 warm full decodes (median
+470 ms) spent 24 ms in that job and another 69 ms between it and the
+decode job; with the predicate the median is 365 ms, in one job (Spark
+status store job times). The predicate costs no job, but Catalyst parses,
+analyses and optimizes each literal (~20 µs per triple, against ~6 µs
+for the broadcast), so it wins only on small sets. Full decode of that
+table to ``noop`` with its manifest padded by phantom 'done' triples
+(median of 11, local[4], 4 vCPUs), predicate / broadcast / aggregate:
+
+    ~10 triples   0.310 / 0.328 / 0.518 s
+    1k            0.318 / 0.325 / 0.464 s
+    2k            0.324 / 0.300 / 0.406 s
+    5k            0.389 / 0.302 / 0.403 s
+    20k           0.900 / 0.348 / 0.420 s
+    50k           1.923 / 0.478 / 0.494 s
+
+so the predicate's bound is 1k, and the broadcast, which beats the
+aggregate from 2k to 50k, is kept above it.
 
 A read's metadata is fixed when its snapshot opens: the format gate
 and the bucketings on both paths, and the visible set on the driver
@@ -48,7 +67,7 @@ before they append.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructType
 
 from .schema import BLOCKS_STORED_SCHEMA, MANIFEST_SCHEMA, TABLE_META_SCHEMA
@@ -74,6 +93,10 @@ DRIVER_MANIFEST_ROWS = 2_000_000
 #: 1.22 s at 10k visible triples, 1.34 vs 1.27 s at 100k, 6.2 vs 3.3 s
 #: at 1M.
 DRIVER_VISIBLE_ROWS = 50_000
+
+#: largest visible set a literal predicate carries (``_member_of``);
+#: measured in the module docstring
+PREDICATE_VISIBLE_ROWS = 1_000
 
 #: the key every visibility join runs on
 TRIPLE = ["bucket", "salt", "run_id"]
@@ -112,6 +135,31 @@ def pending_groups(io, planned: DataFrame, run_id: str | None = None) -> DataFra
     when small; Catalyst/AQE picks the strategy at scale."""
     done = completed_groups(io, run_id)
     return planned.join(done, ["bucket", "salt"], "left_anti")
+
+
+def _member_of(triples) -> Column:
+    """Exact predicate "(bucket, salt, run_id) is one of ``triples``"
+    (an Arrow table), as ONE SQL text: one py4j call however many
+    triples, where ``Column.isin`` makes one per value. ``run_id IN
+    (…)`` goes into the parquet scan as a pushed filter; the triple's
+    text key ``bucket:salt:HEX(run_id)`` then meets an IN list that
+    Catalyst turns into a hash set. Run ids travel hex-encoded, so no
+    quote, backslash, colon or non-ASCII character needs escaping (under
+    any parser setting) and no two triples share a key. A null column
+    makes the key null, never a member (``triples`` holds none); an
+    empty set is FALSE, which Catalyst folds into an empty relation —
+    no scan, no job."""
+    if triples.num_rows == 0:
+        return F.lit(False)
+    runs = {r: r.encode().hex().upper() for r in triples["run_id"].to_pylist()}
+    keys = ", ".join(
+        f"'{b}:{s}:{runs[r]}'"
+        for b, s, r in zip(*(triples[c].to_pylist() for c in TRIPLE))
+    )
+    run_ids = ", ".join(f"CAST(X'{h}' AS STRING)" for h in runs.values())
+    return F.expr(
+        f"run_id IN ({run_ids}) AND concat(bucket, ':', salt, ':', hex(run_id)) IN ({keys})"
+    )
 
 
 def _arrow_dataset(path: str, schema: StructType, columns: list[str]):
@@ -163,12 +211,18 @@ class ReadSnapshot:
             )
         visible = None if root is None else self._driver_visible(root)
         self._visible_runs = None  # without Arrow: collected if a point lookup asks
+        #: the visible set as an Arrow table when a literal predicate
+        #: carries it (``where_visible``); its frame is built on demand
+        self._triples = None
+        self._visible = None
         if visible is not None:
             self._visible_runs = set(visible["run_id"].unique().to_pylist())
-        if visible is not None and visible.num_rows <= DRIVER_VISIBLE_ROWS:
-            self.visible = F.broadcast(io.spark.createDataFrame(visible, _TRIPLE_SCHEMA))
+        if visible is not None and visible.num_rows <= PREDICATE_VISIBLE_ROWS:
+            self._triples = visible
+        elif visible is not None and visible.num_rows <= DRIVER_VISIBLE_ROWS:
+            self._visible = F.broadcast(io.spark.createDataFrame(visible, _TRIPLE_SCHEMA))
         else:
-            self.visible = (
+            self._visible = (
                 read_manifest(io)
                 .groupBy(*TRIPLE)
                 .agg(
@@ -177,6 +231,7 @@ class ReadSnapshot:
                 )
                 .where(F.col("done") & ~F.col("retired"))
                 .select(*TRIPLE)
+                .dropna()
             )
 
     def _read_meta(self, root: str | None) -> list[tuple]:
@@ -215,11 +270,31 @@ class ReadSnapshot:
             "done", pc.equal(m["status"], "done")
         ).append_column("retired", pc.equal(m["status"], "retired"))
         g = flags.group_by(TRIPLE).aggregate([("done", "any"), ("retired", "any")])
-        return g.filter(pc.and_(g["done_any"], pc.invert(g["retired_any"]))).select(TRIPLE)
+        visible = g.filter(pc.and_(g["done_any"], pc.invert(g["retired_any"])))
+        return visible.select(TRIPLE).drop_null()  # a null key is never visible
+
+    @property
+    def visible(self) -> DataFrame:
+        """The visible triples as a frame. Where a literal predicate
+        carries them it is an Arrow local relation built on first use;
+        reads never ask for it (``where_visible``)."""
+        if self._visible is None:
+            self._visible = self.io.spark.createDataFrame(self._triples, _TRIPLE_SCHEMA)
+        return self._visible
+
+    def where_visible(self, df: DataFrame, visible: bool = True) -> DataFrame:
+        """The rows of ``df`` whose (bucket, salt, run_id) readers of
+        this snapshot see — or, with ``visible=False``, do not see (a
+        null key included). A literal predicate on the driver path, a
+        semi- or anti-join on ``visible`` otherwise."""
+        if self._triples is None:
+            return df.join(self.visible, TRIPLE, "left_semi" if visible else "left_anti")
+        member = _member_of(self._triples)
+        return df.where(member if visible else ~F.coalesce(member, F.lit(False)))
 
     def blocks(self) -> DataFrame:
-        """Blocks visible to readers: the blocks table left-semi-joined
-        on the visible triples."""
+        """Blocks visible to readers (``where_visible`` on the blocks
+        table)."""
         io = self.io
         if not io.exists(BLOCKS):
             # a mid-vacuum crash leaves `blocks` momentarily absent with
@@ -248,7 +323,7 @@ class ReadSnapshot:
         # concurrent writers); orphaned blocks from an uncommitted run
         # remain invisible because their run_id has no manifest row;
         # maintenance-superseded triples are hidden by their 'retired' row.
-        return io.read(BLOCKS, BLOCKS_STORED_SCHEMA).join(self.visible, TRIPLE, "left_semi")
+        return self.where_visible(io.read(BLOCKS, BLOCKS_STORED_SCHEMA))
 
     def bucket_predicates(self, conv_id: str) -> list | None:
         """The bucket ``conv_id`` hashes to under every bucketing a

@@ -324,8 +324,7 @@ def main(argv: list[str] | None = None) -> int:
         manifest = ckpt.read_manifest(io)
         # report VISIBLE state (what decode sees), plus maintenance debt
         summary = (
-            manifest.where(F.col("status") == "done")
-            .join(snap.visible, ckpt.TRIPLE, "left_semi")
+            snap.where_visible(manifest.where(F.col("status") == "done"))
             .agg(
                 F.count("*").alias("groups"),
                 F.sum("n_rows").alias("rows"),
@@ -335,8 +334,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         retired = manifest.where(F.col("status") == "retired").count()
         by_codec = (
-            io.read(ckpt.METRICS)
-            .join(snap.visible, ckpt.TRIPLE, "left_semi")
+            snap.where_visible(io.read(ckpt.METRICS))
             .groupBy("column", "codec")
             .agg(F.sum("encoded_bytes").alias("bytes"), F.count("*").alias("groups"))
             .orderBy("column", "codec")

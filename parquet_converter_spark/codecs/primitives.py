@@ -44,10 +44,17 @@ def bitunpack(data: bytes, n: int, width: int) -> np.ndarray:
     """Inverse of :func:`bitpack` — returns a uint64 array of length n.
 
     Multiply-accumulate over the width dimension (≤64 vectorized
-    passes) instead of materializing a 64-wide matrix.
+    passes) instead of materializing a 64-wide matrix. A payload
+    shorter than ``n`` codes raises ``ValueError``: ``np.unpackbits``
+    would zero-pad it, or read uninitialized memory when it is empty.
     """
     if width == 0 or n == 0:
         return np.zeros(n, dtype=np.uint64)
+    if len(data) < (n * width + 7) // 8:
+        raise ValueError(
+            f"bit-packed payload holds {len(data)} bytes, {n} codes of "
+            f"{width} bits need {(n * width + 7) // 8}"
+        )
     bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8), count=n * width)
     bits = bits.reshape(n, width)
     out = np.zeros(n, dtype=np.uint64)

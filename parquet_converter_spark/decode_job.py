@@ -11,10 +11,12 @@ Each public read (``decode_table``, ``decode_time_slice``,
 ``checkpoint.ReadSnapshot``, which answers the format gate, the visible
 triple set and a point lookup's candidate buckets. On a local table
 whose manifest holds at most ``checkpoint.DRIVER_MANIFEST_ROWS`` rows
-and ``checkpoint.DRIVER_VISIBLE_ROWS`` visible triples that costs no
-Spark job, so a full decode runs two: the broadcast of the visible set
-and the consumer's own action. Other tables resolve visibility with one
-distributed aggregate inside the same plan (checkpoint docstring).
+that costs no Spark job, and a visible set of at most
+``checkpoint.PREDICATE_VISIBLE_ROWS`` triples reaches the blocks scan as
+a literal predicate, so a full decode runs one job: the consumer's own
+action. Larger visible sets and other tables join the blocks scan with
+the visible set, broadcast or aggregated inside the same plan
+(checkpoint docstring).
 """
 
 from __future__ import annotations

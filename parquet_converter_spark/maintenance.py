@@ -48,7 +48,7 @@ def _visible_group_stats(snap) -> DataFrame:
     the manifest (tiny — one row per group, no blocks read)."""
     m = ckpt.read_manifest(snap.io).where(F.col("status") == "done")
     return (
-        m.join(snap.visible, ckpt.TRIPLE, "left_semi")
+        snap.where_visible(m)
         .groupBy(*ckpt.TRIPLE)
         .agg(
             F.sum("n_chunks").alias("n_chunks"),
@@ -468,10 +468,9 @@ def reclaimable_bytes(io, repair: bool = True) -> int:
 def _dead_blocks(snap) -> DataFrame:
     """(triple, blk_bytes) of every block row no reader of ``snap`` can
     see — retired triples and orphaned attempts; binary columns pruned."""
-    return (
-        snap.io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA)
-        .select(*ckpt.TRIPLE, "blk_bytes")
-        .join(snap.visible, ckpt.TRIPLE, "left_anti")
+    return snap.where_visible(
+        snap.io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA).select(*ckpt.TRIPLE, "blk_bytes"),
+        visible=False,
     )
 
 

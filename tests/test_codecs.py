@@ -54,6 +54,20 @@ def test_bitpack_roundtrip():
         assert (out == vals).all(), width
 
 
+def test_bitunpack_rejects_a_short_payload():
+    """An empty payload made ``np.unpackbits`` return uninitialized
+    memory and a short one was zero-padded; both must fail."""
+    from parquet_converter_spark.codecs.core import _decode_uint_vec
+
+    with pytest.raises(ValueError, match="need 2"):
+        bitunpack(b"", 2, 8)
+    with pytest.raises(ValueError, match="need 2"):
+        bitunpack(b"\xff", 2, 8)
+    assert list(bitunpack(b"\xff\xf0", 3, 4)) == [15, 15, 15]  # exact fit decodes
+    with pytest.raises(ValueError):
+        _decode_uint_vec(np.uint64(7).tobytes() + bytes([3]), 5)
+
+
 def test_zigzag():
     vals = np.array([0, -1, 1, -2, 2, 2**62, -(2**62), np.iinfo(np.int64).min + 1])
     assert (zigzag_decode(zigzag_encode(vals)) == vals).all()

@@ -10,7 +10,8 @@ group.
 
 Every read opens one ``checkpoint.ReadSnapshot``; on a local table it
 resolves the format gate, visibility and a point lookup's candidate
-buckets with no Spark job, so a read's budget is its sink's own jobs."""
+buckets with no Spark job and hands visibility to the blocks scan as a
+literal predicate, so a read's budget is its sink's own jobs."""
 
 from __future__ import annotations
 
@@ -35,16 +36,17 @@ from parquet_converter_spark.schema import (
 )
 from parquet_converter_spark.synth import synth_pandas
 from parquet_converter_spark.tableio import ParquetDirTableIO
+from parquet_converter_spark.verify import verify_decode_digest
 
 #: SQL executions per warm append: one per step-1/2 collect and per append
 WARM_APPEND_EXECUTIONS = 6
 #: probe 2 + row estimate 2 + blocks 2 + table_meta 1 + manifest 2 + metrics 2
 WARM_APPEND_JOBS = 11
-#: pinned visible-group stats 3 (visibility comes from the read
-#: snapshot, no job) + their counts 2 + the rewrite's encode, which has
-#: neither probe nor row estimate (blocks 3 + table_meta 1 + manifest 2 +
-#: metrics 2); no error probe, no blocks_after re-read
-COMPACT_JOBS = 13
+#: pinned visible-group stats 2 (visibility is the read snapshot's
+#: literal predicate, no job) + their counts 2 + the rewrite's encode,
+#: which has neither probe nor row estimate (blocks 3 + table_meta 1 +
+#: manifest 2 + metrics 2); no error probe, no blocks_after re-read
+COMPACT_JOBS = 12
 
 
 def _jobs(spark, group: str, fn):
@@ -128,10 +130,11 @@ def _noop(df) -> None:
 def test_read_path_job_budget(spark, batches, tmp_path_factory):
     """Jobs per read on a local table with two runs under two
     bucketings: the snapshot itself runs none; a full or projected
-    decode to a no-op sink runs 2 (the visible set's broadcast and the
-    sink), a time slice at most 2 and a point lookup at most 3. Without
-    the snapshot a full decode ran 6: 2 for a format-version aggregate
-    and 3 for a two-distinct anti-join broadcast."""
+    decode to a no-op sink, a time slice and a point lookup run 1 each
+    (the sink's; a broadcast visible set added one, and before the
+    snapshot a format-version aggregate and a two-distinct anti-join
+    added 4 more); the digest verify is one SQL execution of 3 jobs
+    (each side's partial aggregate and the result)."""
     io = ParquetDirTableIO(spark, str(tmp_path_factory.mktemp("reads")))
     encode_table(spark, batches[0], io, run_id="a", salt_rows=256, num_buckets=4)
     encode_table(spark, batches[1], io, run_id="b", salt_rows=256, num_buckets=8)
@@ -141,11 +144,17 @@ def test_read_path_job_budget(spark, batches, tmp_path_factory):
         return _jobs(spark, f"read-{name}", fn)[1]
 
     assert jobs("snapshot", lambda: ckpt.ReadSnapshot(io)) == 0
-    assert jobs("full", lambda: _noop(decode_table(spark, io))) == 2
+    assert jobs("full", lambda: _noop(decode_table(spark, io))) == 1
     proj = ["conv_id", "turn_idx"]
-    assert jobs("projected", lambda: _noop(decode_table(spark, io, columns=proj))) == 2
-    assert jobs("slice", lambda: _noop(decode_time_slice(spark, io, row["ts"], row["ts"]))) <= 2
-    assert jobs("point", lambda: _noop(decode_conversation(spark, io, row["conv_id"]))) <= 3
+    assert jobs("projected", lambda: _noop(decode_table(spark, io, columns=proj))) == 1
+    assert jobs("slice", lambda: _noop(decode_time_slice(spark, io, row["ts"], row["ts"]))) <= 1
+    assert jobs("point", lambda: _noop(decode_conversation(spark, io, row["conv_id"]))) <= 1
+    expected = decode_table(spark, io).localCheckpoint(eager=True)
+    r, n_jobs, execs = _jobs(
+        spark, "read-verify", lambda: verify_decode_digest(decode_table(spark, io), expected)
+    )
+    assert r["ok"], r
+    assert (n_jobs, execs) == (3, 1)
 
 
 @pytest.mark.parametrize(

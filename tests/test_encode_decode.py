@@ -326,6 +326,68 @@ def test_decode_error_isolation_and_corrupt_scan(spark, transcripts, tmp_path):
     )
 
 
+def cut_packed_tail(blob: bytes) -> bytes:
+    """``blob`` with the last byte of its codec payload cut off, framed
+    uncompressed: a section cut short, as a corrupt length leaves it."""
+    from parquet_converter_spark.codecs.arrow_blocks import _HDR, _U64
+    from parquet_converter_spark.codecs.blocks import _decompress
+
+    version, codec_id, dtype_id, comp, n, nulls = _HDR.unpack_from(blob, 0)
+    pos = _HDR.size + ((n + 7) // 8 if nulls else 0)
+    (raw_len,) = _U64.unpack_from(blob, pos)
+    payload = _decompress(comp, blob[pos + 8 :], raw_len)[:-1]
+    return (
+        _HDR.pack(version, codec_id, dtype_id, 0, n, nulls)
+        + blob[_HDR.size : pos]
+        + _U64.pack(len(payload))
+        + payload
+    )
+
+
+def test_block_with_a_short_section_fails_to_decode():
+    import pyarrow as pa
+
+    from parquet_converter_spark.codecs import decode_block
+    from parquet_converter_spark.codecs.arrow_blocks import (
+        decode_block_arrow,
+        encode_block_arrow,
+    )
+
+    blob = encode_block_arrow(pa.array(np.arange(500) * 7 % 1000), "int64", "forbp")
+    assert decode_block_arrow(blob)[0].to_pylist() == decode_block(blob)[0].tolist()
+    with pytest.raises(ValueError, match="bit-packed payload"):
+        decode_block_arrow(cut_packed_tail(blob))
+    with pytest.raises(ValueError, match="bit-packed payload"):
+        decode_block(cut_packed_tail(blob))
+
+
+def test_block_with_a_short_section_is_skipped(spark, transcripts, tmp_path):
+    """A block whose bit-packed section is cut short fails the decode
+    under ``on_error='raise'`` and drops its rows under ``'skip'`` —
+    it never decodes to zero-padded values."""
+    from pyspark.sql import functions as F
+
+    from parquet_converter_spark import checkpoint as ckpt
+
+    io = ParquetDirTableIO(spark, str(tmp_path / "t"))
+    encode_table(spark, transcripts, io, run_id="r1", salt_rows=512, num_buckets=4,
+                 codec={"turn_idx": "forbp"})
+    pdf = io.read(ckpt.BLOCKS).toPandas()
+    victim = pdf.index[0]
+    n_lost = int(pdf.loc[victim, "n_rows"])
+    pdf.loc[victim, "turn_idx_blk"] = cut_packed_tail(bytes(pdf.loc[victim, "turn_idx_blk"]))
+    io.overwrite(spark.createDataFrame(pdf, schema=io.read(ckpt.BLOCKS).schema), ckpt.BLOCKS,
+                 compression="uncompressed")
+
+    with pytest.raises(Exception, match="bit-packed payload"):
+        decode_table(spark, io).count()
+    kept = decode_table(spark, io, on_error="skip")
+    assert kept.count() == transcripts.count() - n_lost
+    assert verify_decode_digest(kept, transcripts.join(
+        kept.select("conv_id", "turn_idx"), ["conv_id", "turn_idx"], "left_semi"))["ok"]
+    assert kept.where(F.col("turn_idx").isNull()).count() == 0
+
+
 def test_decode_rejects_newer_format_version(spark, transcripts, tmp_path):
     """A table written by a future engine version must fail fast with a
     clear message, not garbled per-block errors."""

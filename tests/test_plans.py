@@ -84,7 +84,9 @@ def test_profile_agg_is_single_wholestage_scan(spark, lineitem):
 
 
 def test_decode_plan_has_no_shuffle(spark, tmp_path):
-    """Decode is embarrassingly parallel — no Exchange in its plan."""
+    """Decode is embarrassingly parallel — no Exchange in its plan — and
+    a local table's visibility is a literal predicate on the blocks
+    scan, so no Join either."""
     from parquet_converter_spark.decode_job import decode_table
     from parquet_converter_spark.encode_job import encode_table
     from parquet_converter_spark.plans.inspect import executed_plan
@@ -98,9 +100,9 @@ def test_decode_plan_has_no_shuffle(spark, tmp_path):
     encode_table(spark, df, io, run_id="r1", salt_rows=2048, num_buckets=2)
     decoded = decode_table(spark, io)
     plan = executed_plan(decoded)
-    # the only exchange allowed is the manifest-side (tiny) join input
-    body = plan.split("InMemoryTableScan")[0]
-    assert "Exchange hashpartitioning(conv_id" not in plan
+    assert "Exchange" not in plan and "Join" not in plan
+    # the visible runs reach the parquet scan (one run: an equality)
+    assert "PushedFilters: [IsNotNull(run_id), EqualTo(run_id,r1~" in plan
     assert any(m in plan for m in ("MapInArrow", "MapInPandas", "mapInPandas", "PythonMapInArrow"))
 
 def test_estimate_input_rows_no_full_scan_on_csv(spark, tmp_path, monkeypatch):

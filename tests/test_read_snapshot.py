@@ -1,6 +1,7 @@
-"""The read snapshot's driver path (pyarrow over the local manifest and
-table_meta) must answer exactly what its distributed fallback answers,
-on a table holding every manifest and directory state a reader meets."""
+"""Every path of the read snapshot — the literal predicate, the
+broadcast visible set, the distributed aggregate and the fallback that
+reads no metadata with pyarrow — must answer exactly alike, on a table
+holding every manifest and directory state a reader meets."""
 
 from __future__ import annotations
 
@@ -17,13 +18,23 @@ from parquet_converter_spark import checkpoint as ckpt
 from parquet_converter_spark.decode_job import decode_conversation, decode_table
 from parquet_converter_spark.encode_job import encode_table
 from parquet_converter_spark.localframe import local_df
-from parquet_converter_spark.maintenance import compact_blocks
+from parquet_converter_spark.maintenance import compact_blocks, reclaimable_bytes
 from parquet_converter_spark.schema import MANIFEST_SCHEMA, TRANSCRIPT_SCHEMA
 from parquet_converter_spark.synth import synth_pandas
 from parquet_converter_spark.tableio import ParquetDirTableIO
 from parquet_converter_spark.verify import verify_decode_digest
 
 GHOST = "ghost~1"  # an attempt that never committed
+#: run ids a literal predicate must carry exactly
+ODD_RUNS = ("it's:a\\b", "ünï码:x")
+
+#: the constants that route a snapshot onto each visibility path
+PATHS = {
+    "predicate": {},
+    "broadcast": {"PREDICATE_VISIBLE_ROWS": -1},
+    "aggregate": {"PREDICATE_VISIBLE_ROWS": -1, "DRIVER_VISIBLE_ROWS": -1},
+    "fallback": {"DRIVER_MANIFEST_ROWS": -1},
+}
 
 
 @pytest.fixture(scope="module")
@@ -32,12 +43,12 @@ def source(spark):
     return spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA).cache()
 
 
-def _encode_two_runs(spark, source, io):
+def _encode_two_runs(spark, source, io, run_ids=("r0", "r1")):
     """Two runs of different geometry over two thirds of ``source``;
     returns the three thirds."""
     thirds = [source.where(F.col("turn_idx") % 3 == k) for k in range(3)]
     for k, part in enumerate(thirds[:2]):
-        encode_table(spark, part, io, run_id=f"r{k}", salt_rows=512, chunk_rows=16,
+        encode_table(spark, part, io, run_id=run_ids[k], salt_rows=512, chunk_rows=16,
                      num_buckets=4 + 4 * k, resume=False)
     return thirds
 
@@ -49,7 +60,7 @@ def table(spark, source, tmp_path_factory):
     ``_temporary/`` directory and a ``.crc`` file in ``manifest/``; a
     legacy ``table_meta`` file without the geometry columns."""
     io = ParquetDirTableIO(spark, str(tmp_path_factory.mktemp("snap")))
-    thirds = _encode_two_runs(spark, source, io)
+    thirds = _encode_two_runs(spark, source, io, ODD_RUNS)
     # a bounded compaction retires SOME triples and leaves others done
     assert compact_blocks(spark, io, chunk_rows=4096, max_groups=8)["compacted_groups"] == 8
 
@@ -100,47 +111,106 @@ def table(spark, source, tmp_path_factory):
     return io
 
 
-def _fallback(monkeypatch):
-    monkeypatch.setattr(ckpt, "DRIVER_MANIFEST_ROWS", 0)
+def _path(snap) -> str:
+    """Which visibility path serves the reads of ``snap`` (asked of the
+    analyzed plan: the optimizer drops a join with an empty relation)."""
+    plan = snap.blocks()._jdf.queryExecution().analyzed().toString()
+    if "Join" not in plan:
+        return "predicate"
+    return "broadcast" if "LocalRelation" in plan else "aggregate"
 
 
-def _local_relation(snap) -> bool:
-    return "LocalRelation" in snap.visible._jdf.queryExecution().optimizedPlan().toString()
+def _read(spark, io, source, conv, monkeypatch, path):
+    with monkeypatch.context() as m:
+        for name, value in PATHS[path].items():
+            m.setattr(ckpt, name, value)
+        snap = ckpt.ReadSnapshot(io)
+        return (
+            _path(snap),
+            {tuple(r) for r in snap.visible.collect()},
+            verify_decode_digest(decode_table(spark, io), source),
+            sorted(tuple(r) for r in decode_conversation(spark, io, conv).collect()),
+            reclaimable_bytes(io, repair=False),
+        )
 
 
-def _read(spark, io, source):
-    snap = ckpt.ReadSnapshot(io)
-    triples = {tuple(r) for r in snap.visible.collect()}
-    conv = source.select("conv_id").first()[0]
-    return (
-        _local_relation(snap),
-        triples,
-        verify_decode_digest(decode_table(spark, io), source),
-        sorted(tuple(r) for r in decode_conversation(spark, io, conv).collect()),
-    )
+def _reads(spark, io, source, conv, monkeypatch) -> dict:
+    reads = {p: _read(spark, io, source, conv, monkeypatch, p) for p in PATHS}
+    assert {p: r[0] for p, r in reads.items()} == {
+        "predicate": "predicate", "broadcast": "broadcast",
+        "aggregate": "aggregate", "fallback": "aggregate",
+    }
+    assert all(r[1:] == reads["predicate"][1:] for r in reads.values())
+    return reads["predicate"][1:]
+
+
+def _jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-jobs", "snapshot-jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return len(sc.statusTracker().getJobIdsForGroup("snapshot-jobs"))
 
 
 def test_driver_path_equals_distributed_path(spark, source, table, monkeypatch):
-    driver = _read(spark, table, source)
-    # a visible set past the local-relation bound: Arrow still answers
-    # the format gate and visible runs, Spark's aggregate the triples
-    monkeypatch.setattr(ckpt, "DRIVER_VISIBLE_ROWS", 0)
-    large = _read(spark, table, source)
-    _fallback(monkeypatch)
-    fallback = _read(spark, table, source)
-    assert (driver[0], large[0], fallback[0]) == (True, False, False)
-    assert driver[1:] == large[1:] == fallback[1:]
+    conv = source.select("conv_id").first()[0]
+    triples, digest, turns, dead = _reads(spark, table, source, conv, monkeypatch)
 
-    triples, digest, turns = driver[1:]
     m = ckpt.read_manifest(table)
     retired = {tuple(r) for r in m.where("status = 'retired'").select(*ckpt.TRIPLE).collect()}
     runs = {t[2] for t in triples}
     assert len(retired) == 8 and not retired & triples
     assert GHOST not in runs and any(r.startswith("old") for r in runs)
     assert any(r.startswith("compact") for r in runs)
+    assert {r.rsplit("~", 1)[0] for r in runs} >= set(ODD_RUNS)
     assert digest["ok"] and digest["decoded_rows"] == source.count()
-    conv = source.select("conv_id").first()[0]
     assert len(turns) == source.where(F.col("conv_id") == conv).count() > 0
+    assert dead > 0  # the retired triples' and the ghost attempt's blocks
+
+
+def test_empty_visible_set_and_null_keys(spark, source, tmp_path, monkeypatch):
+    """With every triple retired, each path reads no rows and counts
+    every block as reclaimable; the predicate's blocks frame is an empty
+    local relation, evaluated without a job. Beside a live run, a block
+    and a 'done' manifest row with a null run_id are never visible and
+    the block counts as reclaimable."""
+    io = ParquetDirTableIO(spark, str(tmp_path / "t"))
+    encode_table(spark, source, io, run_id="gone", salt_rows=512, num_buckets=4)
+    done = ckpt.read_manifest(io).where("status = 'done'")
+    io.append(ckpt.retire_rows(done).localCheckpoint(eager=True), ckpt.MANIFEST,
+              compression="snappy")
+    conv = source.select("conv_id").first()[0]
+    every_block = io.read(ckpt.BLOCKS).agg(F.sum("blk_bytes")).first()[0]
+    empty = source.limit(0)
+    triples, digest, turns, dead = _reads(spark, io, empty, conv, monkeypatch)
+    assert (triples, digest["ok"], digest["decoded_rows"], turns) == (set(), True, 0, [])
+    assert dead == every_block
+    assert _jobs(spark, lambda: ckpt.ReadSnapshot(io).blocks().collect()) == 0
+
+    live = source.where(F.col("turn_idx") % 3 == 0)
+    encode_table(spark, live, io, run_id="live", salt_rows=512, num_buckets=4, resume=False)
+    nulled = io.read(ckpt.BLOCKS, ckpt.BLOCKS_STORED_SCHEMA).limit(1).withColumn(
+        "run_id", F.lit(None).cast("string")
+    )
+    b, s, blk = nulled.select("bucket", "salt", "blk_bytes").first()
+    io.append(nulled.localCheckpoint(eager=True), ckpt.BLOCKS)
+    pq.write_table(
+        pa.table({
+            "run_id": pa.array([None], pa.string()), "bucket": pa.array([b], pa.int32()),
+            "salt": pa.array([s], pa.int64()), "n_chunks": pa.array([1], pa.int32()),
+            "n_rows": pa.array([1], pa.int64()), "encoded_bytes": pa.array([1], pa.int64()),
+            "status": ["done"],
+        }),
+        os.path.join(io.path(ckpt.MANIFEST), "part-null.parquet"),
+    )
+    triples, digest, turns, dead = _reads(spark, io, live, conv, monkeypatch)
+    assert triples and {r.split("~")[0] for _b, _s, r in triples} == {"live"}
+    assert digest["ok"] and digest["decoded_rows"] == live.count()
+    assert len(turns) == live.where(F.col("conv_id") == conv).count() > 0
+    assert dead == every_block + blk
 
 
 @pytest.mark.parametrize("path", ["driver", "fallback"])
@@ -150,7 +220,7 @@ def test_newer_format_fails_every_read_alike(spark, source, tmp_path, monkeypatc
     meta = io.read(ckpt.TABLE_META).withColumn("format_version", F.lit(99))
     io.overwrite(meta.localCheckpoint(eager=True), ckpt.TABLE_META)
     if path == "fallback":
-        _fallback(monkeypatch)
+        monkeypatch.setattr(ckpt, "DRIVER_MANIFEST_ROWS", 0)
     with pytest.raises(ValueError, match="format_version 99") as full:
         decode_table(spark, io)
     with pytest.raises(ValueError) as point:

@@ -148,14 +148,61 @@ def test_digest_plan_has_no_join_or_corpus_shuffle(ref):
     """The digest side-aggregate must be a pure (partial -> final)
     HashAggregate: no Join, and the only Exchange is the single-row
     partial-aggregate merge — never a hash repartition of the corpus."""
-    from parquet_converter_spark.verify import KEY_COLUMNS, VALUE_COLUMNS, _digest_frame
+    from parquet_converter_spark.verify import KEY_COLUMNS, VALUE_COLUMNS, _digest_frame, _digests
 
-    plan = (
-        _digest_frame(ref.select(*KEY_COLUMNS, *VALUE_COLUMNS))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    side = _digest_frame(ref.select(*KEY_COLUMNS, *VALUE_COLUMNS))
+    tampered = ref.withColumn("text", F.concat("text", F.lit("!")))
+    for frame in (side, _digests(tampered, ref)):  # one side; both in one action
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan
+        assert "hashpartitioning" not in plan  # SinglePartition merge only
+        assert "HashAggregate" in plan
+
+
+def test_digest_flags_a_reference_only_mismatch(ref):
+    """Both sides' digests come from one action; a cell changed on the
+    reference side alone must still flag its column."""
+    key = ref.select("conv_id", "turn_idx").orderBy("conv_id", "turn_idx").head()
+    tampered = ref.withColumn(
+        "role",
+        F.when(
+            (F.col("conv_id") == key["conv_id"]) & (F.col("turn_idx") == key["turn_idx"]),
+            F.lit("tampered"),
+        ).otherwise(F.col("role")),
     )
-    assert "Join" not in plan
-    assert "hashpartitioning" not in plan  # SinglePartition merge only
-    assert "HashAggregate" in plan
+    r = verify_decode_digest(ref, tampered)
+    assert not r["ok"] and r["role"] == 1
+    assert r["text"] == r["tool"] == r["ts"] == 0
+    assert r["decoded_rows"] == r["reference_rows"] and r["key_digest_match"]
+
+
+def test_digest_raises_on_a_corrupt_decoded_block(spark, ref, tmp_path):
+    """A corrupt block under ``on_error='raise'`` fails the decoded
+    side's stage while the reference side's runs in the same action:
+    the verify must raise, not hang on the other stage."""
+    import threading
+
+    from parquet_converter_spark import checkpoint as ckpt
+    from parquet_converter_spark.decode_job import decode_table
+    from parquet_converter_spark.encode_job import encode_table
+    from parquet_converter_spark.tableio import ParquetDirTableIO
+
+    io = ParquetDirTableIO(spark, str(tmp_path / "t"))
+    encode_table(spark, ref, io, run_id="r1", salt_rows=512, num_buckets=4)
+    pdf = io.read(ckpt.BLOCKS).toPandas()
+    pdf.loc[pdf.index[0], "text_blk"] = bytes(pdf.loc[pdf.index[0], "text_blk"])[:7]
+    io.overwrite(spark.createDataFrame(pdf, schema=io.read(ckpt.BLOCKS).schema), ckpt.BLOCKS,
+                 compression="uncompressed")
+    out = {}
+
+    def run():
+        try:
+            out["result"] = verify_decode_digest(decode_table(spark, io), ref)
+        except Exception as e:  # noqa: BLE001 - the failure is the expected outcome
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "verify_decode_digest hung on a failed decode stage"
+    assert "error" in out, out
