@@ -60,9 +60,15 @@ aggregate from 2k to 50k, is kept above it.
 A read's metadata is fixed when its snapshot opens: the format gate
 and the bucketings on both paths, and the visible set on the driver
 path (the fallback's visible set is a lazy plan, re-read by each
-action). No caller holds a snapshot across a commit: compaction and
-retention pin the frames they derive from it with ``localCheckpoint``
-before they append.
+action). No caller holds a snapshot across a commit: compaction takes
+its qualifying set as Arrow from the snapshot's driver-side manifest
+read, and otherwise, like retention, pins the frames it derives from
+the snapshot with ``localCheckpoint`` before it appends.
+
+The same driver-side reads serve the writers: ``resume_probe`` answers
+an encode's pre-encode questions from ``table_meta`` and the manifest
+with pyarrow, and vacuum counts dead rows against ``arrow_visible``
+(encode_job.py, maintenance.py).
 """
 
 from __future__ import annotations
@@ -162,21 +168,57 @@ def _member_of(triples) -> Column:
     )
 
 
-def _arrow_dataset(path: str, schema: StructType, columns: list[str]):
-    """pyarrow dataset over one table directory, projected to
-    ``columns`` of the pinned ``schema``: a file lacking a column (a
-    legacy ``table_meta``) reads it as null. The dataset ignores
-    ``_``- and ``.``-prefixed entries (``_SUCCESS``, ``_temporary/``,
-    ``.crc`` checksums) exactly as Spark's file listing does."""
-    import pyarrow as pa
+def arrow_dataset(root: str, name: str, schema: StructType, columns: list[str]):
+    """pyarrow dataset over table ``name`` under the driver-local
+    ``root``, projected to ``columns`` of the pinned ``schema``: a file
+    lacking a column (a legacy ``table_meta``) reads it as null. The
+    dataset ignores ``_``- and ``.``-prefixed entries (``_SUCCESS``,
+    ``_temporary/``, ``.crc`` checksums, a driver append's hidden temp
+    file) exactly as Spark's file listing does."""
+    import os
+
     import pyarrow.dataset as ds
+
+    return ds.dataset(
+        os.path.join(root, name), format="parquet", schema=_arrow_schema(schema, columns)
+    )
+
+
+def _arrow_schema(schema: StructType, columns: list[str]):
+    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
     # nullable: Spark writes every parquet column as optional
-    arrow_schema = pa.schema(
-        [pa.field(c, to_arrow_type(schema[c].dataType)) for c in columns]
-    )
-    return ds.dataset(path, format="parquet", schema=arrow_schema)
+    return pa.schema([pa.field(c, to_arrow_type(schema[c].dataType)) for c in columns])
+
+
+def driver_manifest(io, root: str, columns: list[str]):
+    """The manifest's ``columns`` read on the driver as an Arrow table
+    (empty when the manifest is absent), or None when it holds more
+    than ``DRIVER_MANIFEST_ROWS`` rows (footer count, no data read)."""
+    if not io.exists(MANIFEST):
+        return _arrow_schema(MANIFEST_SCHEMA, columns).empty_table()
+    dataset = arrow_dataset(root, MANIFEST, MANIFEST_SCHEMA, columns)
+    if dataset.count_rows() > DRIVER_MANIFEST_ROWS:
+        return None
+    return dataset.to_table()
+
+
+def _visible_of(m):
+    """``done − retired`` over an Arrow manifest: the visible triples in
+    one group-by (a null key is never visible)."""
+    import pyarrow.compute as pc
+
+    flags = m.select(TRIPLE).append_column(
+        "done", pc.equal(m["status"], "done")
+    ).append_column("retired", pc.equal(m["status"], "retired"))
+    g = flags.group_by(TRIPLE).aggregate([("done", "any"), ("retired", "any")])
+    visible = g.filter(pc.and_(g["done_any"], pc.invert(g["retired_any"])))
+    return visible.select(TRIPLE).drop_null()
+
+
+#: the manifest columns ``ReadSnapshot(group_stats=True)`` sums per triple
+_GROUP_STATS = ["n_chunks", "n_rows", "encoded_bytes"]
 
 
 class ReadSnapshot:
@@ -190,18 +232,20 @@ class ReadSnapshot:
     without rewriting history: a 'retired' manifest row for the same
     triple hides it from every reader while the lineage of both the
     original commit and the retirement stays in the manifest. Old
-    tables have no retired rows, so this is the plain done-set."""
+    tables have no retired rows, so this is the plain done-set.
 
-    def __init__(self, io):
-        from .localframe import driver_fs_path
-        from .tableio import ParquetDirTableIO
+    On the driver path ``arrow_visible`` holds that set as an Arrow
+    table (None otherwise); with ``group_stats`` the same manifest read
+    also yields ``group_stats``: per visible triple, the sums of its
+    'done' rows' n_chunks, n_rows and encoded_bytes (compaction's
+    qualifying set)."""
+
+    def __init__(self, io, group_stats: bool = False):
+        from .tableio import driver_root
 
         self.io = io
-        root = (
-            driver_fs_path(io.spark, io.root)
-            if isinstance(io, ParquetDirTableIO)
-            else None
-        )
+        #: the table root on the driver's filesystem, or None
+        self.root = root = driver_root(io)
         self._meta = self._read_meta(root)
         newest = max((v for _run, _nb, v in self._meta if v is not None), default=None)
         if newest is not None and newest > SUPPORTED_FORMAT_VERSION:
@@ -209,7 +253,19 @@ class ReadSnapshot:
                 f"table format_version {newest} is newer than this decoder "
                 f"(supports <= {SUPPORTED_FORMAT_VERSION}); upgrade the engine"
             )
-        visible = None if root is None else self._driver_visible(root)
+        extra = _GROUP_STATS if group_stats else []
+        m = None if root is None else driver_manifest(io, root, [*TRIPLE, "status", *extra])
+        visible = None if m is None else _visible_of(m)
+        self.arrow_visible = visible
+        self.group_stats = None
+        if m is not None and group_stats:
+            import pyarrow.compute as pc
+
+            done = m.filter(pc.equal(m["status"], "done"))
+            sums = done.group_by(TRIPLE).aggregate([(c, "sum") for c in extra])
+            self.group_stats = sums.rename_columns(TRIPLE + extra).join(
+                visible, keys=TRIPLE, join_type="left semi"
+            )
         self._visible_runs = None  # without Arrow: collected if a point lookup asks
         #: the visible set as an Arrow table when a literal predicate
         #: carries it (``where_visible``); its frame is built on demand
@@ -237,41 +293,14 @@ class ReadSnapshot:
     def _read_meta(self, root: str | None) -> list[tuple]:
         """(run_id, num_buckets, format_version) per table_meta row —
         one row per encode attempt, so always driver-sized."""
-        import os
-
         cols = ["run_id", "num_buckets", "format_version"]
         if not self.io.exists(TABLE_META):
             return []  # pre-table_meta tables are format 1 by definition
         if root is None:
             meta = self.io.read(TABLE_META, TABLE_META_SCHEMA).select(*cols)
             return [tuple(r) for r in meta.collect()]
-        t = _arrow_dataset(os.path.join(root, TABLE_META), TABLE_META_SCHEMA, cols).to_table()
+        t = arrow_dataset(root, TABLE_META, TABLE_META_SCHEMA, cols).to_table()
         return list(zip(*[t[c].to_pylist() for c in cols]))
-
-    def _driver_visible(self, root: str):
-        """The visible triples as an Arrow table (``done − retired`` in
-        one group-by), or None when the manifest holds more than
-        ``DRIVER_MANIFEST_ROWS`` rows (footer count, no data read)."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        if not self.io.exists(MANIFEST):
-            return pa.Table.from_batches([], schema=to_arrow_schema(_TRIPLE_SCHEMA))
-        dataset = _arrow_dataset(
-            os.path.join(root, MANIFEST), MANIFEST_SCHEMA, [*TRIPLE, "status"]
-        )
-        if dataset.count_rows() > DRIVER_MANIFEST_ROWS:
-            return None
-        m = dataset.to_table()
-        flags = m.select(TRIPLE).append_column(
-            "done", pc.equal(m["status"], "done")
-        ).append_column("retired", pc.equal(m["status"], "retired"))
-        g = flags.group_by(TRIPLE).aggregate([("done", "any"), ("retired", "any")])
-        visible = g.filter(pc.and_(g["done_any"], pc.invert(g["retired_any"])))
-        return visible.select(TRIPLE).drop_null()  # a null key is never visible
 
     @property
     def visible(self) -> DataFrame:
@@ -388,9 +417,22 @@ def resume_probe(
     ``completed_groups``); False lets the caller skip the resume
     anti-join entirely.
 
-    Both are LIMITED metadata scans (≤2 distinct table_meta geometries,
-    ≤1 manifest row), unioned into ONE collect: one Spark execution
-    answers both. Absent tables cost a filesystem check, no job."""
+    On a table whose root is on the driver's filesystem, with at most
+    ``DRIVER_MANIFEST_ROWS`` manifest rows, both come from pyarrow reads
+    of ``table_meta`` (one row per attempt) and of the manifest's
+    ``run_id`` and ``status``: no Spark job. Otherwise they are LIMITED
+    metadata scans (≤2 distinct table_meta geometries, ≤1 manifest
+    row), unioned into ONE collect: one Spark execution answers both.
+    Absent tables cost a filesystem check, no job."""
+    from .tableio import driver_root
+
+    root = driver_root(io)
+    if root is not None:
+        answer = _driver_probe(
+            io, root, run_id, scope_run, salt_rows, chunk_rows, tb_secs, geometry, committed
+        )
+        if answer is not None:
+            return answer
     from functools import reduce
 
     parts = []
@@ -425,10 +467,56 @@ def resume_probe(
     )
 
 
-def retire_rows(triples: DataFrame) -> DataFrame:
+def _driver_probe(
+    io, root, run_id, scope_run, salt_rows, chunk_rows, tb_secs, geometry, committed
+) -> tuple[int | None, bool] | None:
+    """``resume_probe`` answered by pyarrow reads on the driver, or None
+    when the manifest is too large to read there."""
+    import pyarrow.compute as pc
+
+    def of_run(runs, rid):
+        return pc.or_(pc.equal(runs, rid), pc.starts_with(runs, rid + "~"))
+
+    found = False
+    if committed:
+        m = driver_manifest(io, root, ["run_id", "status"])
+        if m is None:
+            return None
+        done = pc.equal(m["status"], "done")
+        if scope_run is not None:
+            done = pc.and_(done, of_run(m["run_id"], scope_run))
+        found = bool(pc.any(done).as_py())
+    nbs = set()
+    if geometry and io.exists(TABLE_META):
+        cols = ["run_id", "num_buckets", "salt_rows", "chunk_rows", "time_bucket_secs"]
+        t = arrow_dataset(root, TABLE_META, TABLE_META_SCHEMA, cols).to_table()
+        t = t.filter(of_run(t["run_id"], run_id))
+        nbs = {
+            nb
+            for nb, sr, cr, tb in zip(*(t[c].to_pylist() for c in cols[1:]))
+            if sr == int(salt_rows) and cr == int(chunk_rows) and tb == tb_secs
+        }
+    return (int(nbs.pop()) if len(nbs) == 1 else None), found
+
+
+def retire_rows(triples):
     """Manifest rows that RETIRE the given (bucket, salt, run_id)
     triples — the single shape used by every maintenance path (keep it
-    here so a manifest schema change has one site to update)."""
+    here so a manifest schema change has one site to update). A
+    DataFrame of triples gives a DataFrame, an Arrow table an Arrow
+    table."""
+    if not isinstance(triples, DataFrame):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(MANIFEST_SCHEMA)
+        n = triples.num_rows
+        return pa.Table.from_arrays(
+            [triples["run_id"], triples["bucket"], triples["salt"]]
+            + [pa.repeat(pa.scalar(0, f.type), n) for f in list(schema)[3:6]]
+            + [pa.repeat(pa.scalar("retired"), n)],
+            schema=schema,
+        )
     return triples.select(
         F.col("run_id").cast("string"),
         F.col("bucket").cast("int"),

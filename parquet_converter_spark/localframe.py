@@ -7,14 +7,18 @@ action then round-trips the JVM↔Python boundary once per slice — a
 (measured: 2.6 s for ``count()``, ~6 s for ``coalesce(1).write``).
 These helpers keep metadata-sized frames on the fast paths:
 
-* :func:`local_df` — build via Arrow (a JVM LocalRelation: ~0.2 s
-  evaluation, no Python workers);
+* :func:`arrow_rows` — driver-local rows as a ``pyarrow.Table`` under a
+  Spark schema, converted exactly as ``createDataFrame`` would;
+  ``TableIO.append`` takes it directly, so a TableIO-managed metadata
+  table (``table_meta``, ``manifest``, ``metrics``) on the driver's
+  filesystem is written by pyarrow with no Spark job;
+* :func:`local_df` — the same rows as a DataFrame via Arrow (a JVM
+  LocalRelation: ~0.2 s evaluation, no Python workers);
 * :func:`empty_df` — an empty frame with exactly the given schema, as
   an empty Arrow local relation (no RDD at all);
-* :func:`write_local_parquet` — write driver-local rows as ONE parquet
-  file via pyarrow directly (no Spark job; for driver-owned metadata
-  directories like index centroids, not for ``TableIO``-managed
-  tables);
+* :func:`write_local_parquet` — write a pyarrow table as a fresh ONE-file
+  parquet directory (no Spark job; for driver-owned metadata
+  directories like index centroids);
 * :func:`driver_fs_path` — whether a Spark path is on the driver's own
   filesystem, the precondition of every driver-side pyarrow read or
   write.
@@ -41,33 +45,25 @@ def empty_df(spark: SparkSession, schema: StructType) -> DataFrame:
     )
 
 
-def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver-local rows → DataFrame via an Arrow local relation.
-
-    ``rows`` is a list of tuples (as for ``createDataFrame``); ``schema``
-    a StructType or DDL string. The result equals
-    ``createDataFrame(rows, schema)`` value for value: each column is
-    built with ``pa.array(values, type, from_pandas=False)``, so NaN
-    stays NaN (pandas semantics would turn it into null) and int64
-    values stay exact when mixed with None (a pandas column would carry
-    them through float64). Falls back to the plain constructor if Arrow
-    rejects the data (never silently wrong)."""
+def arrow_rows(rows, schema):
+    """Driver-local rows → ``pyarrow.Table`` under the Arrow form of the
+    Spark ``schema`` (a StructType or DDL string), value for value what
+    ``createDataFrame(rows, schema)`` holds: each column is built with
+    ``pa.array(values, type, from_pandas=False)``, so NaN stays NaN
+    (pandas semantics would turn it into null) and int64 values stay
+    exact when mixed with None (a pandas column would carry them
+    through float64); timestamps follow ``TimestampType.toInternal``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import TimestampType
 
-    if isinstance(schema, str):
-        from pyspark.sql.types import _parse_datatype_string
-
-        schema = _parse_datatype_string(schema)
-    if not rows:
-        return empty_df(spark, schema)
+    schema = _struct(schema)
     names = [f.name for f in schema.fields]
-    if {len(r) for r in rows} != {len(names)}:
+    if rows and {len(r) for r in rows} != {len(names)}:
         # fail like createDataFrame(rows, schema) would — a silent
         # zip() truncation would ship arity bugs into metadata tables
         raise ValueError(
-            f"local_df: row arity {sorted({len(r) for r in rows})} != "
+            f"arrow_rows: row arity {sorted({len(r) for r in rows})} != "
             f"schema arity {len(names)}"
         )
 
@@ -81,14 +77,37 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         return pa.array(values, arrow_type, from_pandas=False)
 
     arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [[] for _ in names]
+    return pa.Table.from_arrays(
+        [
+            _column(list(col), f, af.type)
+            for col, f, af in zip(columns, schema.fields, arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+
+
+def _struct(schema) -> StructType:
+    if isinstance(schema, str):
+        from pyspark.sql.types import _parse_datatype_string
+
+        return _parse_datatype_string(schema)
+    return schema
+
+
+def local_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-local rows → DataFrame via an Arrow local relation.
+
+    ``rows`` is a list of tuples (as for ``createDataFrame``); ``schema``
+    a StructType or DDL string. The result equals
+    ``createDataFrame(rows, schema)`` value for value (``arrow_rows``).
+    Falls back to the plain constructor if Arrow rejects the data (never
+    silently wrong)."""
+    schema = _struct(schema)
+    if not rows:
+        return empty_df(spark, schema)
+    table = arrow_rows(rows, schema)  # arity errors raise here
     try:
-        table = pa.Table.from_arrays(
-            [
-                _column(list(col), f, af.type)
-                for col, f, af in zip(zip(*rows), schema.fields, arrow_schema)
-            ],
-            schema=arrow_schema,
-        )
         return spark.createDataFrame(table, schema)
     except Exception:  # pragma: no cover — conversion edge cases
         return spark.createDataFrame(rows, schema)

@@ -21,6 +21,14 @@ storage format:
   metadata DELETE / rewrite_data_files instead — same contract,
   cheaper mechanics).
 
+Planning reads only metadata. On a table whose root is on the driver's
+filesystem it runs no Spark job: compaction's qualifying groups and
+counts are an Arrow filter over the read snapshot's manifest read, a
+rewrite's decode is scoped by a literal predicate on the triples (up to
+``checkpoint.PREDICATE_VISIBLE_ROWS``), and vacuum counts dead rows and
+bytes from a pyarrow read of the blocks table's small columns. Other
+tables plan with distributed aggregates.
+
 Retention leans on the per-block ts zone maps: a group whose every
 block proves ``ts_max < cutoff`` retires WITHOUT being read; only
 groups whose zone maps straddle the cutoff (or carry null stats =
@@ -35,7 +43,7 @@ its users need once outputs become long-lived tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import checkpoint as ckpt
 from .decode_job import _decode_blocks, decode_table
@@ -70,10 +78,8 @@ def _plan_rewrite_buckets(spark, io, triples, n_rows, salt_rows, time_bucket):
     secs = resolve_time_bucket(time_bucket)
     if secs is None:
         return plan_num_buckets(n_rows, salt_rows, par), 1
-    keys = triples.select("bucket", "salt", "run_id")
     span = (
-        io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA)
-        .join(keys, ["bucket", "salt", "run_id"], "left_semi")
+        _of_triples(io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA), triples)
         .agg(F.min("ts_min").alias("lo"), F.max("ts_max").alias("hi"))
         .collect()[0]
     )
@@ -83,25 +89,37 @@ def _plan_rewrite_buckets(spark, io, triples, n_rows, salt_rows, time_bucket):
     return plan_tb_num_buckets(n_rows, n_windows, salt_rows, par), n_windows
 
 
+def _of_triples(df: DataFrame, triples, n_keys: int | None = None) -> DataFrame:
+    """The rows of ``df`` whose (bucket, salt, run_id) is one of
+    ``triples``: a DataFrame, or an Arrow table read off a driver-side
+    manifest (so at most ``DRIVER_MANIFEST_ROWS`` rows). An Arrow set of
+    at most ``PREDICATE_VISIBLE_ROWS`` triples is a literal predicate
+    (``checkpoint._member_of``, no job). Otherwise it is a semi-join,
+    broadcast when the set provably fits: ``n_keys``, the caller's count
+    of a frame, is at most ``DRIVER_MANIFEST_ROWS`` (a cold compact at
+    10^12 turns can select millions of groups, same guard as the resume
+    join); without a count Catalyst/AQE pick the strategy."""
+    if not isinstance(triples, DataFrame):
+        if triples.num_rows <= ckpt.PREDICATE_VISIBLE_ROWS:
+            return df.where(ckpt._member_of(triples))
+        n_keys = triples.num_rows
+        triples = df.sparkSession.createDataFrame(triples.select(ckpt.TRIPLE))
+    keys = triples.select(*ckpt.TRIPLE)
+    if n_keys is not None and n_keys <= ckpt.DRIVER_MANIFEST_ROWS:
+        keys = F.broadcast(keys)
+    return df.join(keys, ckpt.TRIPLE, "left_semi")
+
+
 def _decode_triples(
-    spark: SparkSession, io, triples: DataFrame, cols: list[str] | None = None,
+    spark: SparkSession, io, triples, cols: list[str] | None = None,
     n_keys: int | None = None,
 ) -> DataFrame:
     """Decode ONLY the given (bucket, salt, run_id) triples' blocks —
     the maintenance read path. decode_table's own block mapper, scoped
-    by a semi-join on the triple list (broadcast
-    only when it provably fits — a cold compact at 10^12 turns can
-    select millions of groups, same guard as the resume join).
-    ``cols`` projects a column subset: only those columns' binary
-    blocks are read at all (the convergence guard decodes just the
-    key columns, never the text). ``n_keys``: the triple count when the
-    caller already aggregated it — skips the probe job."""
-    keys = triples.select(*ckpt.TRIPLE)
-    if n_keys is None:
-        n_keys = keys.limit(ckpt.DRIVER_MANIFEST_ROWS + 1).count()
-    if n_keys <= ckpt.DRIVER_MANIFEST_ROWS:
-        keys = F.broadcast(keys)
-    blocks = io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA).join(keys, ckpt.TRIPLE, "left_semi")
+    by ``_of_triples``. ``cols`` projects a column subset: only those
+    columns' binary blocks are read at all (the convergence guard
+    decodes just the key columns, never the text)."""
+    blocks = _of_triples(io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA), triples, n_keys)
     cols = list(ENCODED_COLUMNS) if cols is None else list(cols)
     return _decode_blocks(blocks, cols)
 
@@ -122,7 +140,7 @@ def compact_blocks(
     A group qualifies when its average rows-per-block falls below
     ``min_fill * chunk_rows`` (streaming epochs and shattered time
     windows are the usual producers). Qualifying groups are decoded
-    (scoped semi-join — untouched groups are never read), re-encoded
+    (scoped to their triples — untouched groups are never read), re-encoded
     as ONE fresh run with the requested chunk/salt/codec/time_bucket,
     and their old triples retired in the same commit. Returns
     {"compacted_groups", "rows", "blocks_before", "blocks_after",
@@ -143,29 +161,51 @@ def compact_blocks(
     if not 0.0 < min_fill <= 1.0:
         raise ValueError(f"min_fill must be in (0, 1], got {min_fill}")
     recover_vacuum(io)
-    stats = _visible_group_stats(ckpt.ReadSnapshot(io))
-    small = stats.where(
-        (F.col("n_rows") / F.greatest(F.col("n_chunks"), F.lit(1)))
-        < F.lit(min_fill * chunk_rows)
-    )
-    if max_groups is not None:
-        small = small.orderBy(
-            F.desc("n_chunks"), "bucket", "salt", "run_id"
-        ).limit(int(max_groups))
-    small = small.localCheckpoint(eager=True)  # pin the qualifying set:
-    # the rewrite itself appends manifest rows, and a lazy `small`
-    # re-evaluated after the commit would see them
-    # NEVER collected: at 10^12 turns the under-filled set can be
-    # millions of groups; one manifest-sized aggregate gives the counts
-    agg = small.agg(
-        F.count("*").alias("groups"),
-        F.sum("n_rows").alias("rows"),
-        F.sum("n_chunks").alias("chunks"),
-    ).collect()[0]
+    snap = ckpt.ReadSnapshot(io, group_stats=True)
+    if snap.group_stats is not None:
+        # driver path: the snapshot's manifest read already holds the
+        # per-group sums, so the qualifying set is an Arrow filter —
+        # materialized, nothing to pin, no job
+        import pyarrow.compute as pc
+
+        stats = snap.group_stats
+        fill = pc.divide(
+            pc.cast(stats["n_rows"], "double"), pc.max_element_wise(stats["n_chunks"], 1)
+        )
+        small = stats.filter(pc.less(fill, min_fill * chunk_rows))
+        if max_groups is not None:
+            small = small.sort_by(
+                [("n_chunks", "descending")] + [(c, "ascending") for c in ("bucket", "salt", "run_id")]
+            ).slice(0, int(max_groups))
+        agg = {
+            "groups": small.num_rows,
+            "rows": pc.sum(small["n_rows"]).as_py(),
+            "chunks": pc.sum(small["n_chunks"]).as_py(),
+        }
+        triples = small.select(ckpt.TRIPLE)
+    else:
+        small = _visible_group_stats(snap).where(
+            (F.col("n_rows") / F.greatest(F.col("n_chunks"), F.lit(1)))
+            < F.lit(min_fill * chunk_rows)
+        )
+        if max_groups is not None:
+            small = small.orderBy(
+                F.desc("n_chunks"), "bucket", "salt", "run_id"
+            ).limit(int(max_groups))
+        small = small.localCheckpoint(eager=True)  # pin the qualifying set:
+        # the rewrite itself appends manifest rows, and a lazy `small`
+        # re-evaluated after the commit would see them
+        # NEVER collected: at 10^12 turns the under-filled set can be
+        # millions of groups; one manifest-sized aggregate gives the counts
+        agg = small.agg(
+            F.count("*").alias("groups"),
+            F.sum("n_rows").alias("rows"),
+            F.sum("n_chunks").alias("chunks"),
+        ).collect()[0]
+        triples = small.select(*ckpt.TRIPLE)
     if not agg["groups"]:
         return {"compacted_groups": 0, "rows": 0, "blocks_before": 0,
                 "blocks_after": 0, "run_id": None}
-    triples = small.select("bucket", "salt", "run_id")
     # planned from manifest stats + zone maps — no planning data read;
     # window-aware so a time-bucketed rewrite doesn't re-shatter
     nb, n_windows = _plan_rewrite_buckets(
@@ -461,17 +501,32 @@ def reclaimable_bytes(io, repair: bool = True) -> int:
         recover_vacuum(io)
     if not io.exists(ckpt.BLOCKS):
         return 0
-    dead = _dead_blocks(ckpt.ReadSnapshot(io))
-    return int(dead.agg(F.sum("blk_bytes").alias("b")).collect()[0]["b"] or 0)
+    return _dead_blocks(ckpt.ReadSnapshot(io))[1]
 
 
-def _dead_blocks(snap) -> DataFrame:
-    """(triple, blk_bytes) of every block row no reader of ``snap`` can
-    see — retired triples and orphaned attempts; binary columns pruned."""
-    return snap.where_visible(
+def _dead_blocks(snap) -> tuple[int, int]:
+    """(rows, blk_bytes) of the block rows no reader of ``snap`` can see
+    — retired triples and orphaned attempts — from the blocks table's
+    small columns (binary columns pruned). On the driver path, with at
+    most ``DRIVER_MANIFEST_ROWS`` block rows (footer count), a pyarrow
+    read anti-joined with the snapshot's visible set; otherwise one
+    distributed aggregate."""
+    if snap.arrow_visible is not None:
+        import pyarrow.compute as pc
+
+        blocks = ckpt.arrow_dataset(
+            snap.root, ckpt.BLOCKS, BLOCKS_STORED_SCHEMA, [*ckpt.TRIPLE, "blk_bytes"]
+        )
+        if blocks.count_rows() <= ckpt.DRIVER_MANIFEST_ROWS:
+            dead = blocks.to_table().join(
+                snap.arrow_visible, keys=ckpt.TRIPLE, join_type="left anti"
+            )
+            return dead.num_rows, pc.sum(dead["blk_bytes"]).as_py() or 0
+    dead = snap.where_visible(
         snap.io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA).select(*ckpt.TRIPLE, "blk_bytes"),
         visible=False,
-    )
+    ).agg(F.count("*").alias("rows"), F.sum("blk_bytes").alias("bytes")).collect()[0]
+    return int(dead["rows"] or 0), int(dead["bytes"] or 0)
 
 
 def vacuum_blocks(spark: SparkSession, io) -> dict:
@@ -504,23 +559,19 @@ def vacuum_blocks(spark: SparkSession, io) -> dict:
     recover_vacuum(io)  # finish/abort any prior crashed swap first
     if not io.exists(ckpt.BLOCKS):
         return {"bytes_reclaimed": 0, "rows_kept": -1}
-    # ONE stats-only scan answers both maintenance questions (was two:
+    # ONE stats-only read answers both maintenance questions (was two:
     # a reclaimable-bytes sum plus a separate dead-row probe): decide
     # on dead ROWS, not bytes — aborted-commit orphans include 0-byte
     # error-marker rows that still deserve removal
     snap = ckpt.ReadSnapshot(io)
-    dead = (
-        _dead_blocks(snap)
-        .agg(F.count("*").alias("rows"), F.sum("blk_bytes").alias("bytes"))
-        .collect()[0]
-    )
-    freed = int(dead["bytes"] or 0)
-    if int(dead["rows"] or 0) == 0:
+    dead_rows, freed = _dead_blocks(snap)
+    if dead_rows == 0:
         return {"bytes_reclaimed": 0, "rows_kept": -1}
-    visible = snap.blocks()
+    kept = Observation()
+    visible = snap.blocks().observe(kept, F.count("*").alias("rows"))
     tmp_path = io.path(ckpt.BLOCKS) + "__vacuum"
     visible.write.mode("overwrite").option("compression", "uncompressed").parquet(tmp_path)
-    rows_kept = spark.read.parquet(tmp_path).count()
+    rows_kept = kept.get["rows"]
     final = io.path(ckpt.BLOCKS)
     old_path = final + "__old"
     os.rename(final, old_path)

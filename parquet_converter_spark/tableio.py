@@ -8,13 +8,35 @@ snapshot-isolation discipline that works identically on a parquet
 directory and on an Iceberg table. On a real cluster with the
 iceberg-spark-runtime jar, ``IcebergTableIO`` maps the same calls to
 ``writeTo(...).append()`` on a catalog table.
+
+``append`` takes a DataFrame or a driver-sized ``pyarrow.Table`` (the
+engine's metadata rows). A parquet-dir table whose root is on the
+driver's filesystem writes the Arrow table as ONE parquet file with
+pyarrow, no Spark job: first under a hidden ``.``-prefixed name, then
+``os.replace``-d into the table directory, so Spark's file listing,
+pyarrow datasets and ``exists`` never see a partial file. Every other
+table wraps it in an Arrow local relation and appends as usual.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _frame(spark: SparkSession, data) -> DataFrame:
+    """``data`` as a DataFrame: an Arrow table becomes a local relation
+    whose schema is read off its Arrow schema (nullability included)."""
+    return data if isinstance(data, DataFrame) else spark.createDataFrame(data)
+
+
+def driver_root(io) -> str | None:
+    """The driver filesystem path of a parquet-dir table's root, or None
+    (Iceberg, a remote filesystem): the precondition of every driver-side
+    pyarrow read or write of the table's metadata."""
+    return io.driver_root() if isinstance(io, ParquetDirTableIO) else None
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -39,10 +61,16 @@ class ParquetDirTableIO:
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
+    def driver_root(self) -> str | None:
+        from .localframe import driver_fs_path
+
+        return driver_fs_path(self.spark, self.root)
+
     def exists(self, name: str) -> bool:
         p = self.path(name)
         return os.path.isdir(p) and any(
-            f.endswith(".parquet") for f in os.listdir(p)
+            f.endswith(".parquet") and not f.startswith((".", "_"))
+            for f in os.listdir(p)
         )
 
     def read(self, name: str, schema=None) -> DataFrame:
@@ -51,11 +79,28 @@ class ParquetDirTableIO:
             reader = reader.schema(schema)
         return reader.parquet(self.path(name))
 
-    def append(self, df: DataFrame, name: str, compression: str = "uncompressed") -> None:
+    def append(self, df, name: str, compression: str = "uncompressed") -> None:
         # uncompressed by default for the blocks table: the engine's own
         # codecs + zstd wrap ARE the compression; re-snappy-ing binary
         # blocks would blur the measured footprint.
-        df.write.mode("append").option("compression", compression).parquet(self.path(name))
+        root = None if isinstance(df, DataFrame) else self.driver_root()
+        if root is None:
+            df = _frame(self.spark, df)
+            df.write.mode("append").option("compression", compression).parquet(self.path(name))
+            return
+        import pyarrow.parquet as pq
+
+        table_dir = os.path.join(root, name)
+        os.makedirs(table_dir, exist_ok=True)
+        codec = "none" if compression == "uncompressed" else compression
+        part = f"part-00000-{uuid.uuid4()}-c000.parquet"
+        tmp = os.path.join(table_dir, f".{part}.tmp")
+        try:
+            pq.write_table(df, tmp, compression=codec)
+            os.replace(tmp, os.path.join(table_dir, part))
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def overwrite(self, df: DataFrame, name: str, compression: str = "snappy") -> None:
         df.write.mode("overwrite").option("compression", compression).parquet(self.path(name))
@@ -195,7 +240,8 @@ class IcebergTableIO:
             f"ALTER TABLE {self._ident(name)} ADD COLUMNS ({cols_ddl})"
         )
 
-    def append(self, df: DataFrame, name: str, compression: str = "uncompressed") -> None:
+    def append(self, df, name: str, compression: str = "uncompressed") -> None:
+        df = _frame(self.spark, df)
         self._ensure_namespace()
         # parquet-dir append semantics: first append creates the table
         # (with its partition spec — bucket-partitioned blocks make

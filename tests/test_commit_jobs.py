@@ -1,12 +1,14 @@
-"""Spark job budgets of the encode commit, of compaction and of reads.
+"""Spark job budgets of the encode commit, of maintenance and of reads.
 
 ``encode_table`` runs as four sequential steps (probe → row estimate →
 blocks ‖ table_meta → manifest ‖ metrics); the side appends run on an
 ``InheritableThread``, so counting the jobs of one ``setJobGroup``
-sees them too. The pinned counts fail on any added job — a re-read of
-the manifest or blocks for the summary, a separate resume probe, a
-parquet schema inference — and on a side append that escaped the job
-group.
+sees them too. On a local table the probe, the table_meta append and
+the manifest and metrics derivation and appends run on the driver with
+pyarrow, so a warm append's jobs are its row estimate's and its encode's.
+The pinned counts fail on any added job — a re-read of the manifest or
+blocks through Spark, a Spark resume probe, a parquet schema inference
+— and on a side append that escaped the job group.
 
 Every read opens one ``checkpoint.ReadSnapshot``; on a local table it
 resolves the format gate, visibility and a point lookup's candidate
@@ -28,7 +30,7 @@ from parquet_converter_spark.decode_job import (
 )
 from parquet_converter_spark.encode_job import encode_table
 from parquet_converter_spark.localframe import empty_df
-from parquet_converter_spark.maintenance import compact_blocks
+from parquet_converter_spark.maintenance import compact_blocks, vacuum_blocks
 from parquet_converter_spark.schema import (
     BLOCKS_STORED_SCHEMA,
     MANIFEST_SCHEMA,
@@ -38,15 +40,20 @@ from parquet_converter_spark.synth import synth_pandas
 from parquet_converter_spark.tableio import ParquetDirTableIO
 from parquet_converter_spark.verify import verify_decode_digest
 
-#: SQL executions per warm append: one per step-1/2 collect and per append
-WARM_APPEND_EXECUTIONS = 6
-#: probe 2 + row estimate 2 + blocks 2 + table_meta 1 + manifest 2 + metrics 2
-WARM_APPEND_JOBS = 11
-#: pinned visible-group stats 2 (visibility is the read snapshot's
-#: literal predicate, no job) + their counts 2 + the rewrite's encode,
-#: which has neither probe nor row estimate (blocks 3 + table_meta 1 +
-#: manifest 2 + metrics 2); no error probe, no blocks_after re-read
-COMPACT_JOBS = 12
+#: SQL executions per warm append: the row estimate's and the blocks
+#: append's; probe, table_meta, manifest and metrics run on the driver
+WARM_APPEND_EXECUTIONS = 2
+#: row estimate 2 + blocks 2
+WARM_APPEND_JOBS = 4
+#: the rewrite's blocks append only: the qualifying set and its counts
+#: come from the snapshot's driver-side manifest read, the rewrite's
+#: decode scope is a literal predicate, and the rewrite's encode has
+#: neither probe nor row estimate nor a distributed commit
+COMPACT_JOBS = 2
+#: the kept rows' rewrite only: dead-row stats from a pyarrow read, the
+#: kept count from an Observation on the rewrite
+VACUUM_JOBS = 1
+VACUUM_EXECUTIONS = 1
 
 
 def _jobs(spark, group: str, fn):
@@ -99,6 +106,10 @@ def test_warm_append_and_compaction_job_budget(spark, batches, tmp_path_factory)
     assert c["rows"] == first["rows"] + s["rows"]
     assert c["blocks_after"] < c["blocks_before"]
     assert jobs == COMPACT_JOBS
+
+    v, jobs, execs = _jobs(spark, "vacuum", lambda: vacuum_blocks(spark, io))
+    assert v["bytes_reclaimed"] > 0 and v["rows_kept"] == c["blocks_after"]
+    assert (jobs, execs) == (VACUUM_JOBS, VACUUM_EXECUTIONS)
 
 
 def test_zero_group_rerun_observation_returns(spark, batches, tmp_path_factory):

@@ -3,6 +3,8 @@
 * ``local_df`` (Arrow local relation) ≡ ``createDataFrame(rows)``
   value for value: NaN, ±inf, int64 beyond 2^53 next to None, and
   naive datetimes read in the system zone.
+* A ``table_meta`` row the driver writes with pyarrow reads back from
+  Spark exactly as the ``local_df`` row Spark wrote, time zone included.
 * The IVF index writes its centroids/meta with pyarrow only when Spark
   resolves the index dir to the local filesystem; under a non-local
   ``fs.defaultFS`` a scheme-less dir goes through the Spark writer, so
@@ -17,7 +19,10 @@ from datetime import datetime, timezone
 import numpy as np
 import pytest
 
-from parquet_converter_spark.localframe import driver_fs_path, local_df
+from parquet_converter_spark import checkpoint as ckpt
+from parquet_converter_spark.localframe import arrow_rows, driver_fs_path, local_df
+from parquet_converter_spark.schema import TABLE_META_SCHEMA
+from parquet_converter_spark.tableio import ParquetDirTableIO
 from parquet_converter_spark.operators import similarity
 
 
@@ -50,6 +55,33 @@ def test_local_df_matches_create_dataframe(spark, new_york_tz):
     want = [repr(tuple(r)) for r in spark.createDataFrame(rows, schema).collect()]
     assert got == want
     assert "nan" in got[0] and str(big) in got[0] and "inf" in got[1]
+
+
+def test_driver_written_table_meta_reads_back_like_spark_written(
+    spark, tmp_path, new_york_tz
+):
+    # no naive time in the fall-back hour: ``toInternal`` maps one to
+    # either instant depending on the previous ``time.mktime`` call, so
+    # no two writers of it agree reliably
+    rows = [
+        ("r~1", 4, 512, 64, 1, 3600, datetime(2024, 3, 10, 2, 30), datetime(2024, 11, 3, 2, 30)),
+        ("r~2", 8, 512, 64, 1, None, datetime(2024, 7, 1, 12, 0, 0, 123456), None),
+        ("r~3", 2, 256, 64, 1, 60, datetime(2024, 1, 1, tzinfo=timezone.utc), datetime(2024, 1, 2)),
+    ]
+    driver = ParquetDirTableIO(spark, str(tmp_path / "driver"))
+    driver.append(arrow_rows(rows, TABLE_META_SCHEMA), ckpt.TABLE_META, compression="snappy")
+    files = [f for f in (tmp_path / "driver" / ckpt.TABLE_META).iterdir()]
+    assert len(files) == 1 and files[0].name.endswith(".parquet")  # pyarrow, no Spark job
+    local_df(spark, rows, TABLE_META_SCHEMA).write.parquet(str(tmp_path / "local_df"))
+    # and the plain constructor local_df stands in for
+    spark.createDataFrame(rows, TABLE_META_SCHEMA).write.parquet(str(tmp_path / "rows"))
+
+    def read(path):
+        df = spark.read.schema(TABLE_META_SCHEMA).parquet(str(path))
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    got = read(driver.path(ckpt.TABLE_META))
+    assert got == read(tmp_path / "local_df") == read(tmp_path / "rows")
 
 
 def test_ivf_index_metadata_follows_non_local_default_fs(spark, tmp_path, monkeypatch):

@@ -453,3 +453,23 @@ def test_window_preserving_compact_keeps_zone_maps_tight(spark, transcripts, tmp
     assert too_wide == 0
     assert _blocks_count(io) < before
     assert verify_decode(decode_table(spark, io), transcripts)["ok"]
+
+
+def test_vacuum_of_a_fully_retired_table_returns(spark, transcripts, tmp_path_factory):
+    """With every triple retired the kept-rows rewrite is an empty
+    relation; the Observation that counts its rows must still arrive
+    (``Observation.get`` blocks until the observed write reports)."""
+    import threading
+
+    io = ParquetDirTableIO(spark, str(tmp_path_factory.mktemp("vacall")))
+    encode_table(spark, transcripts, io, run_id="g", salt_rows=512, num_buckets=2)
+    done = ckpt.read_manifest(io).where("status = 'done'")
+    io.append(ckpt.retire_rows(done).localCheckpoint(eager=True), ckpt.MANIFEST,
+              compression="snappy")
+    result = {}
+    t = threading.Thread(target=lambda: result.update(v=vacuum_blocks(spark, io)), daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "vacuum_blocks hung on an empty observed write"
+    assert result["v"]["rows_kept"] == 0 and result["v"]["bytes_reclaimed"] > 0
+    assert decode_table(spark, io).count() == 0
